@@ -1,10 +1,18 @@
-"""Round-6 measurement harness (guide §1) — NOT the driver bench.
+"""Per-query measurement harness — NOT the driver bench.
 
-Times any subset of the headline queries in isolation with the noop sink,
-records best-of-N + spread, and optionally dumps .explain("formatted") to
+Times any subset of the headline queries with the noop sink, records
+best-of-N + spread, and optionally dumps .explain("formatted") to
 plans/r06/<query>_<tag>.txt. bench.py stays frozen (driver contract); this
 file exists so optimization work can cite per-query evidence without touching
 the measured harness.
+
+Runs are pass-major: each pass runs every named query once, as a served
+query pack does, so a query's second run sees whatever the rest of the pass
+left in the JVM's caches. Next to each run's wall time it records the
+generated-code layer: how many classes Janino compiled during the run
+(``CodegenMetrics`` compilation count) and the compile time they took
+(``CodeGenerator.compileTime``). A warm pass whose classes all fit the
+generated-code cache compiles nothing.
 
 Usage:
   python bench_extra.py [--sf DIR] [--repeats N] [--plans TAG] [query ...]
@@ -20,24 +28,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench import HEADLINE  # noqa: E402
 from knowledge_graph_rag_spark.session import get_spark  # noqa: E402
-
-HEADLINE = [
-    "top_talkers",
-    "exploit_preparation",
-    "top3_types_per_user",
-    "degree_spikes",
-    "pricing_summary",
-    "revenue_by_nation",
-    "keywords_topk",
-    "language_detect",
-    "exact_dedup_by_source",
-    "ngram_jaccard_pairs",
-    "knn_bruteforce",
-    "benchmark_decontamination",
-    "pii_redaction_stats",
-    "clustering_coefficients",
-]
 
 
 def main() -> None:
@@ -45,7 +37,7 @@ def main() -> None:
     ap.add_argument("queries", nargs="*", default=None)
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR",
                                                    "/root/testdata/sf0.1"))
-    ap.add_argument("--repeats", type=int, default=3)
+    ap.add_argument("--repeats", type=int, default=3, help="passes")
     ap.add_argument("--plans", default=None,
                     help="dump explain('formatted') to plans/r06/<q>_<TAG>.txt")
     ap.add_argument("--kg", action="store_true", help="also time kg extraction")
@@ -71,10 +63,9 @@ def main() -> None:
               "customer", "nation"):
         spark.read.parquet(f"{args.sf}/{t}.parquet").count()
 
-    out: dict[str, dict] = {}
-    for name in names:
-        if args.plans:
-            os.makedirs("plans/r06", exist_ok=True)
+    if args.plans:
+        os.makedirs("plans/r06", exist_ok=True)
+        for name in names:
             df = qs[name](spark, args.sf)
             txt = df._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -83,14 +74,27 @@ def main() -> None:
             )
             with open(f"plans/r06/{name}_{args.plans}.txt", "w") as f:
                 f.write(txt)
-        runs = []
-        for _ in range(args.repeats):
+
+    codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    out: dict[str, dict] = {
+        name: {"runs": [], "compiles": [], "compile_ms": []} for name in names
+    }
+    for _ in range(args.repeats):
+        for name in names:
             spark.sparkContext.setJobDescription(f"bench_extra:{name}")
+            n0, ns0 = compiles.getCount(), codegen.compileTime()
             t0 = time.time()
             qs[name](spark, args.sf).write.format("noop").mode("overwrite").save()
-            runs.append(round(time.time() - t0, 3))
-        out[name] = {"best": min(runs), "spread": round(max(runs) - min(runs), 3),
-                     "runs": runs}
+            rec = out[name]
+            rec["runs"].append(round(time.time() - t0, 3))
+            rec["compiles"].append(compiles.getCount() - n0)
+            rec["compile_ms"].append(round((codegen.compileTime() - ns0) / 1e6, 1))
+    for rec in out.values():
+        runs = rec["runs"]
+        rec["best"] = min(runs)
+        rec["spread"] = round(max(runs) - min(runs), 3)
 
     if args.kg:
         n_docs = spark.read.parquet(f"{args.sf}/documents.parquet").count() * 4
@@ -112,8 +116,11 @@ def main() -> None:
             "docs_per_sec": round(n_docs / min(runs), 1),
         }
 
+    pass_compiles = [sum(out[n]["compiles"][i] for n in names)
+                     for i in range(args.repeats)]
     print(json.dumps({"sf": args.sf, "queries": out,
-                      "total_best": round(sum(v["best"] for v in out.values()), 3)}))
+                      "total_best": round(sum(v["best"] for v in out.values()), 3),
+                      "pass_compiles": pass_compiles}))
     spark.stop()
 
 

@@ -37,36 +37,15 @@ def _as_double(col):
     return col.cast("array<double>")
 
 
-def _cosine(a, b):
-    dot = cosine_sim_col(a, b)
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x * x))
-    return dot / (na * nb)
+def _norm(c):
+    return F.sqrt(F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def brute_force_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(query_id, neighbor_id, cosine, rank) exact top-k; queries broadcast.
-
-    r06: each side's L2 norm is a projected column computed once per vector
-    — the old per-pair ``_cosine`` re-derived BOTH norms inside interpreted
-    higher-order aggregates for every (query, candidate) pair (queries × n
-    redundant norm evaluations). Same arithmetic, same rounding."""
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    cand = vectors.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("e")
-    ).select("neighbor_id", "e", norm(F.col("e")).alias("en"))
-    qs = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qe")
-    ).select("query_id", "qe", norm(F.col("qe")).alias("qn"))
-    pairs = F.broadcast(qs).join(cand, F.col("neighbor_id") != F.col("query_id"))
+def _exact_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Exact cosine top-k per query over candidate ``pairs`` of (query_id,
+    qe, qn, neighbor_id, e, en). Each L2 norm (qn, en) is a column projected
+    once per vector upstream, not re-derived per (query, candidate) pair
+    inside interpreted higher-order aggregates."""
     scored = pairs.withColumn(
         "cosine",
         F.round(
@@ -81,6 +60,24 @@ def brute_force_topk(
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
+
+
+def brute_force_topk(
+    vectors: DataFrame,
+    queries: DataFrame,
+    k: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(query_id, neighbor_id, cosine, rank) exact top-k; queries broadcast."""
+    cand = vectors.select(
+        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("e")
+    ).select("neighbor_id", "e", _norm(F.col("e")).alias("en"))
+    qs = queries.select(
+        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qe")
+    ).select("query_id", "qe", _norm(F.col("qe")).alias("qn"))
+    pairs = F.broadcast(qs).join(cand, F.col("neighbor_id") != F.col("query_id"))
+    return _exact_topk(pairs, k)
 
 
 def _hyperplanes(dim: int, bits: int, table: int, seed: int = 42) -> list[list[float]]:
@@ -114,20 +111,20 @@ def lsh_buckets(
     vec_col: str = "embedding",
     seed: int = 42,
 ) -> DataFrame:
-    """(id, table, bucket) — one row per (vector, table)."""
-    v = vectors.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("e"))
-    per_table = [
-        v.select(
-            "id", "e",
+    """(id, e, en, table, bucket) — one row per (vector, table), with the
+    vector's L2 norm ``en``. One scan: each vector's norm and buckets are
+    projected once, then inlined into a row per table."""
+    v = vectors.select(
+        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("e")
+    ).select("id", "e", _norm(F.col("e")).alias("en"))
+    tables = F.array(*[
+        F.struct(
             F.lit(t).alias("table"),
             _bucket_col(F.col("e"), _hyperplanes(dim, bits, t, seed)).alias("bucket"),
         )
         for t in range(num_tables)
-    ]
-    out = per_table[0]
-    for p in per_table[1:]:
-        out = out.unionByName(p)
-    return out
+    ])
+    return v.select("id", "e", "en", F.inline(tables))
 
 
 def fit_centroids(sample: np.ndarray, n_clusters: int, seed: int = 42,
@@ -245,28 +242,22 @@ def ivf_topk(
 
     v = vectors.select(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("e")
-    )
+    ).select("neighbor_id", "e", _norm(F.col("e")).alias("en"))
     v_cells = _assign_cells(v, centroids, "e", 1).select(
-        "neighbor_id", "e", F.get("cells", 0).alias("cell")
+        "neighbor_id", "e", "en", F.get("cells", 0).alias("cell")
     )
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qe")
-    )
+    ).select("query_id", "qe", _norm(F.col("qe")).alias("qn"))
     q_cells = _assign_cells(q, centroids, "qe", n_probe).select(
-        "query_id", "qe", F.explode("cells").alias("cell")
+        "query_id", "qe", "qn", F.explode("cells").alias("cell")
     )
     cand = (
         q_cells.join(v_cells, "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "qe", "neighbor_id", "e")
+        .select("query_id", "qe", "qn", "neighbor_id", "e", "en")
     )
-    scored = cand.withColumn("cosine", F.round(_cosine(F.col("qe"), F.col("e")), 6))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        scored.select("query_id", "neighbor_id", "cosine")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _exact_topk(cand, k)
 
 
 def build_ivf_index(
@@ -361,7 +352,7 @@ def ivf_query_index(
         centroids = np.asarray(json.load(f), dtype=np.float64)
     q_rows = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qe")
-    ).collect()
+    ).select("query_id", "qe", _norm(F.col("qe")).alias("qn")).collect()
     if not q_rows:
         return spark.createDataFrame(
             [], "query_id long, neighbor_id long, cosine double, rank int"
@@ -372,25 +363,22 @@ def ivf_query_index(
     probed = sorted({int(c) for row in top for c in row})
     q_cells = spark.createDataFrame(
         [
-            (r.query_id, list(r.qe), int(c))
+            (r.query_id, list(r.qe), r.qn, int(c))
             for r, cells in zip(q_rows, top)
             for c in cells
         ],
-        "query_id long, qe array<double>, cell int",
+        "query_id long, qe array<double>, qn double, cell int",
     )
-    index = spark.read.parquet(path).filter(F.col("cell").isin(probed))
+    index = (
+        spark.read.parquet(path).filter(F.col("cell").isin(probed))
+        .withColumn("en", _norm(F.col("e")))
+    )
     cand = (
         q_cells.join(index, "cell")
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "qe", F.col("vec_id").alias("neighbor_id"), "e")
+        .select("query_id", "qe", "qn", F.col("vec_id").alias("neighbor_id"), "e", "en")
     )
-    scored = cand.withColumn("cosine", F.round(_cosine(F.col("qe"), F.col("e")), 6))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        scored.select("query_id", "neighbor_id", "cosine")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _exact_topk(cand, k)
 
 
 def lsh_topk(
@@ -409,22 +397,17 @@ def lsh_topk(
     qb = lsh_buckets(queries, dim, bits, num_tables, id_col, vec_col).select(
         F.col("id").alias("query_id"),
         F.col("e").alias("qe"),
+        F.col("en").alias("qn"),
         "table",
         "bucket",
     )
     cand = (
         qb.join(vb, ["table", "bucket"])
         .filter(F.col("id") != F.col("query_id"))
-        .select("query_id", "qe", F.col("id").alias("neighbor_id"), "e")
+        .select("query_id", "qe", "qn", F.col("id").alias("neighbor_id"), "e", "en")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cand.withColumn("cosine", F.round(_cosine(F.col("qe"), F.col("e")), 6))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        scored.select("query_id", "neighbor_id", "cosine")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _exact_topk(cand, k)
 
 
 # --- IVF-PQ (product quantization; Jégou, Douze, Schmid, TPAMI 2011) --------

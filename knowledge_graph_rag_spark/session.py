@@ -9,6 +9,16 @@ chosen to survive a multi-executor cluster at 100 TB:
 - shuffle partitions sized to cores locally; on a real cluster this is
   overridden by AQE's coalescing from an intentionally high initial number
 - parquet pushdown left enabled (never disable filter/column pushdown)
+- generated-code cache sized to the program's working set. Spark keeps
+  compiled whole-stage and expression classes in one JVM-wide cache of 100
+  entries by default. A warm pass of the 14 headline query-pack leaves needs
+  ~210 classes and the full 90-entry pack ~1,500, so each pass evicted what
+  the next one needed: it recompiled every class with Janino and ran it on a
+  freshly loaded class the JIT had not compiled yet. 2048 entries hold the
+  full pack. A KG build, resume and fold with a few retrieval calls compile
+  ~365 classes, ~75 fewer than with the default. Each cached class retains
+  ~30 KB of heap: +3 MB after a headline pass, +9 MB after the KG run.
+  Static conf: the first session in the JVM fixes it.
 """
 
 from __future__ import annotations
@@ -56,6 +66,7 @@ def get_spark(
         # core busy; AQE re-coalesces downstream where splits are too fine.
         .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
         .config("spark.sql.files.openCostInBytes", str(1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

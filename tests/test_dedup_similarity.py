@@ -1107,9 +1107,10 @@ def test_token_budget_prefilter_exactness_and_shape(spark):
                 expect.add((d, l))
             run += t
         assert {g for g in got if g[1] == lang} == expect, lang
-    # the pre-cut is a broadcast join in the physical plan
+    # the pre-cut is a broadcast equi-join in the physical plan
     plan = kept._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoop" not in plan
+    assert "BroadcastHashJoin" in plan
+    assert "BroadcastNestedLoop" not in plan
     assert "BroadcastExchange" in plan
 
 

@@ -383,3 +383,38 @@ def test_decontaminate_overlap_mark_is_broadcast(spark):
     plan = _plan(decontaminate(corpus, bench, n=3))
     assert "BroadcastHashJoin" in plan, plan[:1500]
     assert "SortMergeJoin" not in plan, plan[:1500]
+
+
+def test_codegen_cache_holds_a_warm_pass(spark):
+    """get_spark sizes Spark's JVM-wide cache of compiled generated classes
+    to the program's working set, so a pass over more distinct classes than
+    Spark's default cache (100 entries) compiles nothing when it runs again.
+    With the default, the second pass recompiles every class with Janino."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
+    from knowledge_graph_rag_spark.plans import driver_queries as DQ
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    leaves = DQ.extended_queries()
+    # each branch inlines its own literals into its generated code
+    branches = reduce(DataFrame.unionAll, [
+        spark.range(64, numPartitions=1)
+        .selectExpr(f"id * {i + 7919} AS a", f"id % {i + 2} AS g")
+        for i in range(60)
+    ])
+    names = ["pricing_summary", "revenue_by_nation", "exact_dedup_by_source",
+             "top3_types_per_user"]
+
+    def one_pass() -> int:
+        before = compiles.getCount()
+        branches.write.format("noop").mode("overwrite").save()
+        for name in names:
+            leaves[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        return compiles.getCount() - before
+
+    first = one_pass()
+    assert first > 100, first
+    assert one_pass() == 0
