@@ -1,118 +1,73 @@
 """Canonicalization: connected components over alias/similarity edges.
 
 The north rule requires MinHash-LSH + connected-components canonicalization;
-the reference's analogue is single-pass exact-key dedup (``graph_merger.py:
-104-140``). graphframes isn't in the environment, so this implements
-**iterative min-label propagation** as a DataFrame loop:
+graphframes isn't in the environment, so :func:`connected_components` is a
+DataFrame loop of large-star / small-star rounds (Kiveris et al., "Connected
+Components in MapReduce and Beyond", SoCC'14). It needs O(log² n) rounds on
+any graph shape; min-label propagation, which it replaced, needs
+O(diameter) rounds and, capped at 25, returned partial labels on a 41-node
+chain. Each round ends in one eager ``localCheckpoint`` (bounded plans), and
+the edge-set fingerprint that decides convergence is observed on that same
+checkpoint job, so convergence costs no job of its own.
 
-    label(u) ← min(label(u), min_{v ∈ Γ(u)} label(v))
+Measured on 4 cores, Spark 4.1.2, jobs per warm call (label propagation →
+this):
 
-Each iteration is one shuffle (join labels onto the symmetrized edge list +
-groupBy) and localCheckpoints to cut lineage so plans stay bounded
-(SURVEY.md §7 "what's hard" a). Converges in O(component diameter)
-iterations — alias/similarity clusters are star-like and shallow (2-3 rounds).
+    dup_cluster_components pairs, sf0.01 (66 edges)            50 → 22
+    dup_cluster_components pairs, sf0.1 (4,741 edges)         200 → 46
+    41-node chain                  380, and 16 components (wrong) → 62
+    kg_lifecycle seed 1, traced canonicalize layer, whole run  125 → 47
 
-For web-scale graphs with long chains use
-:func:`connected_components_alternating` (large-star/small-star, O(log² n)
-rounds on any shape); both produce identical partitions — cross-checked in
-tests/test_merge_link_cc.py::test_cc_implementations_agree.
+The sf0.1 pairs took 9.6–10.8 s a call before and 3.1–4.0 s after.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+# Rounds before giving up. Chains settle in about log2(length) + 1 rounds
+# (41 nodes: 7, 1,000 nodes: 11), so 10^12 nodes need ~41; 64 only trips on
+# a fault.
+MAX_ROUNDS = 64
 
-def _symmetric(edges: DataFrame) -> DataFrame:
+
+def _canon(df: DataFrame) -> DataFrame:
+    """Undirected edge set as distinct (u=max, v=min) pairs, no self-loops."""
     return (
-        edges.select("u", "v")
-        .unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        df.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
 
 
-def connected_components(edges: DataFrame, max_iterations: int = 25) -> DataFrame:
+def _checkpoint(edges: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
+    """Eagerly checkpoint ``edges`` and return it with its fingerprint
+    (count, sum of xxhash64(u, v)), observed on the checkpoint job."""
+    obs = Observation()
+    edges = edges.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
+    ).localCheckpoint(eager=True)
+    m = obs.get
+    return edges, (m["n"], int(m["h"] or 0))
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
     """(node, component) with component = min node id of the component.
 
     ``edges`` needs columns (u, v); string or numeric ids both work (min is
     lexicographic for strings — any total order yields a canonical
-    representative).
+    representative). Self-loops alone add no node. Raises ``RuntimeError``
+    if the edge set has not settled after ``MAX_ROUNDS`` rounds.
     """
-    sym = _symmetric(edges).localCheckpoint(eager=True)
-    labels = (
-        sym.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-
-    for _ in range(max_iterations):
-        nbr_label = (
-            sym.join(labels.withColumnRenamed("node", "v"), "v")
-            .groupBy("u")
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(nbr_label.withColumnRenamed("u", "node"), "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))
-                ).alias("label"),
-                F.col("label").alias("old_label"),
-            )
-        )
-        changed = new_labels.filter(F.col("label") != F.col("old_label")).limit(1).count()
-        labels = new_labels.select("node", "label").localCheckpoint(eager=True)
-        if changed == 0:
-            break
-
-    return labels.select("node", F.col("label").alias("component"))
-
-
-def connected_components_alternating(
-    edges: DataFrame, max_iterations: int = 30
-) -> DataFrame:
-    """Large-star / small-star alternating connected components (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14).
-
-    The web-scale alternative to min-label propagation: converges in
-    O(log² n) rounds on ANY graph shape (label propagation needs O(diameter)
-    rounds, which bites on long chains). Same output contract:
-    (node, component=min id). Both implementations are cross-checked in
-    tests/test_merge_link_cc.py::test_cc_implementations_agree.
-
-    large-star: every node points its larger neighbors at the minimum of its
-    inclusive neighborhood; small-star: every node points its smaller-or-equal
-    neighbors (and itself) at their minimum. Each round is two shuffles and a
-    localCheckpoint to keep the plan bounded.
-    """
-    # canonical undirected representation: (u=max, v=min) pairs
-    def _canon(df: DataFrame) -> DataFrame:
-        return (
-            df.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    cur = _canon(edges).localCheckpoint(eager=True)
-    if cur.isEmpty():
+    cur, fp = _checkpoint(_canon(edges))
+    if fp[0] == 0:
         return cur.select(F.col("u").alias("node"), F.col("v").alias("component"))
 
-    def _fingerprint(df: DataFrame) -> tuple[int, int]:
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")), F.lit(0)
-            ).alias("h"),
-        ).collect()[0]
-        return (row.n, int(row.h))
-
-    prev_fp = _fingerprint(cur)
-    for _ in range(max_iterations):
-        # large-star over the UNDIRECTED neighborhood: every strictly-larger
+    for _ in range(MAX_ROUNDS):
+        # large-star over the undirected neighborhood: every strictly-larger
         # neighbor of u points at min(Γ⁺(u))
         sym = cur.unionByName(
             cur.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -128,16 +83,18 @@ def connected_components_alternating(
         # small-star over the (max→min) orientation: u's smaller-or-equal
         # neighbors (and u) point at their minimum
         small_min = large.groupBy("u").agg(F.min("v").alias("m"))
-        small = _canon(
+        cur, new_fp = _checkpoint(_canon(
             large.join(small_min, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .unionByName(small_min.select("u", F.col("m").alias("v")))
-        ).localCheckpoint(eager=True)
-        fp = _fingerprint(small)
-        cur = small
-        if fp == prev_fp:
+        ))
+        if new_fp == fp:
             break
-        prev_fp = fp
+        fp = new_fp
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {MAX_ROUNDS} rounds"
+        )
 
     assign = cur.groupBy("u").agg(F.min("v").alias("component")).select(
         F.col("u").alias("node"), "component"

@@ -2360,12 +2360,12 @@ def dup_cluster_components(spark, sf_dir):
     """Near-dup CLUSTERING — the step curation runs between candidate pairs
     and representative selection: library ngram_jaccard_pairs (df-capped
     trigram Jaccard, loose 0.03 threshold so chains form) feeds
-    canonicalize.connected_components (min-label propagation), giving every
+    canonicalize.connected_components (large-star/small-star), giving every
     clustered doc its component representative (min doc_id) and cluster
-    size. This driver-pins the CC operator itself — previously pytest-only —
-    via an oracle that unrolls 5 MATERIALIZED min-label-propagation rounds
-    in DuckDB (fixpoint needs 2 at sf0.01; under-unrolling cannot silently
-    pass, it would hash-mismatch the run-to-fixpoint Spark labels)."""
+    size. This driver-pins the CC operator itself via an independent
+    oracle: 5 MATERIALIZED min-label-propagation rounds unrolled in DuckDB
+    (fixpoint needs 2 at sf0.01; under-unrolling cannot silently pass, it
+    would hash-mismatch the run-to-fixpoint Spark labels)."""
     from ..operators.canonicalize import connected_components
     from ..operators.dedup import ngram_jaccard_pairs as lib_pairs
 

@@ -1,25 +1,16 @@
 """Per-partition lineage + metrics (north-rule requirement).
 
-Two complementary mechanisms:
-
-- :func:`stage_observation` — zero-cost row/byte counters attached to the
-  stage's own action via ``DataFrame.observe`` (no extra job).
-- :func:`partition_lineage` — explicit per-partition row counts
-  (``spark_partition_id`` groupBy), emitted as LINEAGE_SCHEMA rows into the
-  metrics table; this is the audit trail that makes a resumed run provably
-  identical to an uninterrupted one (compare per-partition counts across
-  runs).
+:func:`partition_lineage` gives explicit per-partition row counts
+(``spark_partition_id`` groupBy), emitted as LINEAGE_SCHEMA rows into the
+metrics table; this is the audit trail that makes a resumed run provably
+identical to an uninterrupted one (compare per-partition counts across
+runs).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def stage_observation(df: DataFrame, name: str) -> tuple[DataFrame, Observation]:
-    obs = Observation(name)
-    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 def partition_lineage(df: DataFrame, run_id: str, stage: str) -> DataFrame:

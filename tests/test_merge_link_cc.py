@@ -76,15 +76,33 @@ def test_connected_components_basic(spark):
     assert cc["d"] == cc["e"] == "d"
 
 
-def test_connected_components_chain(spark):
-    # long chain exercises multi-iteration convergence
-    n = 12
+@pytest.mark.parametrize("n_nodes", [13, 41])
+def test_connected_components_chain(spark, n_nodes):
+    # a path is the slowest shape; 41 nodes (diameter 40) is beyond any
+    # O(diameter)-round method capped at 25 rounds
     edges = spark.createDataFrame(
-        [(f"n{i:02d}", f"n{i+1:02d}") for i in range(n)], "u string, v string"
+        [(f"n{i:02d}", f"n{i+1:02d}") for i in range(n_nodes - 1)],
+        "u string, v string",
     )
     cc = C.connected_components(edges).collect()
     assert {r.component for r in cc} == {"n00"}
-    assert len(cc) == n + 1
+    assert len(cc) == n_nodes
+
+
+def test_connected_components_empty_and_self_loops(spark):
+    """No edges, or only self-loops, yield no nodes at all."""
+    for rows in ([], [("a", "a"), ("b", "b")]):
+        edges = spark.createDataFrame(rows, "u string, v string")
+        assert C.connected_components(edges).collect() == []
+
+
+def test_connected_components_raises_when_rounds_run_out(spark, monkeypatch):
+    monkeypatch.setattr(C, "MAX_ROUNDS", 1)
+    edges = spark.createDataFrame(
+        [(f"n{i:02d}", f"n{i+1:02d}") for i in range(8)], "u string, v string"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        C.connected_components(edges)
 
 
 def test_minhash_links_alias_variants(spark):
@@ -121,11 +139,25 @@ def test_canonical_map_from_links(spark):
     assert len(set(cmap.values())) == 1  # one cluster, one representative
 
 
-def test_cc_implementations_agree(spark):
-    """Label propagation and alternating large-star/small-star produce the
-    same partition (same min-id representative per component) on seeded
-    random graphs of several shapes."""
+def test_cc_matches_union_find(spark):
+    """Every node's component is the min id of its union-find set, on seeded
+    random graphs of several shapes (sparse forest, dense, mostly
+    isolated pairs)."""
     import random
+
+    def union_find(pairs):
+        parent = {}
+
+        def find(x):
+            while parent.setdefault(x, x) != x:
+                x = parent[x]
+            return x
+
+        for u, v in pairs:
+            if u != v:
+                a, b = find(u), find(v)
+                parent[max(a, b)] = min(a, b)
+        return {x: find(x) for x in parent}
 
     for seed, n_nodes, n_edges in ((1, 20, 15), (2, 40, 60), (3, 30, 8)):
         rng = random.Random(seed)
@@ -134,22 +166,8 @@ def test_cc_implementations_agree(spark):
             for _ in range(n_edges)
         ]
         edges = spark.createDataFrame(pairs, "u string, v string")
-        a = {r.node: r.component for r in C.connected_components(edges).collect()}
-        b = {
-            r.node: r.component
-            for r in C.connected_components_alternating(edges).collect()
-        }
-        assert a == b, (seed, {k: (a.get(k), b.get(k)) for k in set(a) | set(b)
-                               if a.get(k) != b.get(k)})
-
-
-def test_cc_alternating_chain(spark):
-    n = 14
-    edges = spark.createDataFrame(
-        [(f"c{i:02d}", f"c{i+1:02d}") for i in range(n)], "u string, v string"
-    )
-    cc = C.connected_components_alternating(edges).collect()
-    assert {r.component for r in cc} == {"c00"} and len(cc) == n + 1
+        got = {r.node: r.component for r in C.connected_components(edges).collect()}
+        assert got == union_find(pairs), seed
 
 
 def test_pagerank_vs_numpy_oracle(spark):
