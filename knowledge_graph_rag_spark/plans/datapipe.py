@@ -17,19 +17,18 @@ resumes idempotently with zero recomputation of completed stages.
                         cluster-size-independent membership
     stage token_stats   per-doc whitespace + BPE-style token counts, language
                         ID — the training-mix accounting table
-    stage metrics       one lineage row per stage (rows in/out) appended to
-                        the ``dp_metrics`` table
+    stage metrics       one lineage row per stage (rows out), rewritten
+                        into ``dp_<dataset_id>_metrics`` only when a stage ran
 
 Scale shape: each stage's output is a parquet snapshot, so the longest
 lineage a failure can lose is ONE stage; every stage is a pure function of
-the previous snapshot. Counts are computed once per stage from the written
+the previous snapshot, which it reads inside its own compute (a skipped
+stage reads nothing). Counts are computed once per stage from the written
 snapshot (a metadata-cheap count on parquet footers), not by re-executing
-the transform.
+the transform, so a resume that skips every stage runs no Spark job.
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,14 +37,7 @@ from ..operators import canonicalize as C
 from ..operators import dedup as DD
 from ..operators.sampling import hash_sample
 from ..sources.graph_store import GraphStore
-
-
-@dataclass
-class CurationResult:
-    run_id: str
-    stages_run: list[str] = field(default_factory=list)
-    stages_skipped: list[str] = field(default_factory=list)
-    counts: dict[str, int] = field(default_factory=dict)
+from .lineage import PipelineResult, run_stage
 
 
 def _near_dup_drop_ids(docs: DataFrame, jaccard_max_dist: float,
@@ -106,7 +98,7 @@ def curate(
     benchmark: DataFrame | None = None,
     decontam_ngram: int = 13,
     pii_scrub: bool = False,
-) -> CurationResult:
+) -> PipelineResult:
     """Run the curation chain over ``docs`` (doc_id, text, …). Stage outputs
     land as ``dp_<dataset_id>_<stage>`` snapshots; re-running with the same
     (warehouse, dataset_id) skips completed stages (S9 resume semantics).
@@ -134,8 +126,7 @@ def curate(
     text. Both knobs join the config fingerprint only when set, so legacy
     datasets resume under default knobs without a config-mismatch refusal
     (same pattern as ``near_dup_verify_threshold``)."""
-    res = CurationResult(run_id=run_id)
-    metrics_rows: list[tuple] = []
+    res = PipelineResult(run_id=run_id)
 
     # Resume is keyed by (stage, dataset_id), NOT by the knob values — so a
     # re-run with different knobs against an already-curated dataset would
@@ -205,39 +196,35 @@ def curate(
     def tbl(stage: str) -> str:
         return f"dp_{dataset_id}_{stage}"
 
-    def stage(name: str, compute) -> DataFrame:
-        if store.is_done(f"dp_{name}", dataset_id):
-            res.stages_skipped.append(name)
-        else:
-            store.write_snapshot(tbl(name), compute(), partition_by=())
-            store.mark_done(f"dp_{name}", dataset_id, run_id=run_id)
-            res.stages_run.append(name)
-        out = store.read(tbl(name))
-        n = out.count()
-        res.counts[name] = n
-        metrics_rows.append((run_id, name, n))
-        return out
+    def read(stage: str) -> DataFrame:
+        return store.read(tbl(stage))
 
-    exact = stage(
-        "exact_dedup", lambda: DD.dedup_exact(docs, "doc_id", "text")
-    )
-    near = stage(
-        "near_dedup",
-        lambda: exact.join(
+    def stage(name: str, compute) -> str:
+        run_stage(store, res, name, dataset_id, compute,
+                  lambda df: store.write_snapshot(tbl(name), df, partition_by=()),
+                  key=f"dp_{name}")
+        res.counts[name] = sum(n for _, n in store.file_rows(tbl(name)))
+        return name
+
+    stage("exact_dedup", lambda: DD.dedup_exact(docs, "doc_id", "text"))
+
+    def compute_near():
+        exact = read("exact_dedup")
+        drop = (
             _near_dup_drop_ids(exact, near_dup_max_dist, near_dup_strategy,
                                near_dup_verify_threshold)
             if near_dup_strategy != "none"
-            else exact.limit(0).select("doc_id"),
-            "doc_id", "left_anti",
-        ),
-    )
+            else exact.limit(0).select("doc_id")
+        )
+        return exact.join(drop, "doc_id", "left_anti")
 
-    cur = near
+    cur = stage("near_dedup", compute_near)  # the snapshot the next stage reads
     if benchmark is not None:
 
         def compute_decontam():
             from ..operators.decontam import decontaminate
 
+            near = read(cur)
             drop = decontaminate(
                 near, benchmark, id_col="doc_id", text_col="text",
                 n=decontam_ngram,
@@ -246,32 +233,28 @@ def curate(
 
         cur = stage("decontam", compute_decontam)
 
-    pre_quality = cur
-
     def compute_quality():
         from ..functions.text import gopher_quality_cols
 
         q = gopher_quality_cols(F.col("text"))
         return (
-            pre_quality.withColumn("keep", q["keep"]).filter("keep")
+            read(cur).withColumn("keep", q["keep"]).filter("keep")
             .drop("keep")
         )
 
-    quality = stage("quality", compute_quality)
+    cur = stage("quality", compute_quality)
 
-    cur = quality
     if pii_scrub:
 
         def compute_pii():
             from ..functions.pii import redact_pii_col
 
-            return quality.withColumn("text", redact_pii_col(F.col("text")))
+            return read(cur).withColumn("text", redact_pii_col(F.col("text")))
 
         cur = stage("pii_scrub", compute_pii)
 
-    pre_sample = cur
-
     def compute_sample():
+        pre_sample = read(cur)
         if lang_fractions is None:
             return hash_sample(pre_sample, "doc_id", sample_fraction)
         from ..functions.text import language_id_col
@@ -285,7 +268,7 @@ def curate(
             default_fraction=sample_fraction,
         ).drop("lang")
 
-    sampled = stage("sample", compute_sample)
+    stage("sample", compute_sample)
 
     def compute_token_stats():
         from ..functions.text import BPE_PRETOKEN_REGEX, GOPHER_WS
@@ -295,7 +278,7 @@ def curate(
         )
         # THE pinned pre-tokenizer definition (oracle-pinned via the
         # bpe_token_counts driver entry) — never an inline copy
-        return sampled.select(
+        return read("sample").select(
             "doc_id",
             F.size(ws_toks).cast("long").alias("ws_tokens"),
             F.size(F.regexp_extract_all(
@@ -306,8 +289,10 @@ def curate(
 
     stage("token_stats", compute_token_stats)
 
-    metrics = spark.createDataFrame(
-        metrics_rows, "run_id string, stage string, rows_out long"
-    )
-    store.write_snapshot(tbl("metrics"), metrics, partition_by=())
+    if res.stages_run:
+        metrics = spark.createDataFrame(
+            [(run_id, name, n) for name, n in res.counts.items()],
+            "run_id string, stage string, rows_out long",
+        )
+        store.write_snapshot(tbl("metrics"), metrics, partition_by=())
     return res

@@ -12,32 +12,27 @@ The Spark re-expression of the reference's upload-csv lifecycle
   stage materialize  nodes/edges snapshots partitioned by graph_id
   stage metrics      per-partition lineage rows per stage → metrics table
 
-Every stage commits a snapshot through GraphStore and records itself in the
-manifest; ``run()`` skips stages whose manifest entry + snapshot exist, so a
+Every stage commits through GraphStore and records itself in the manifest
+(``lineage.run_stage``); ``run()`` skips stages the manifest records, so a
 killed job resumes idempotently (S9 semantics, ``auto_processor.py:828-887``).
+Stages read their input inside their own compute and lineage and counts come
+from parquet footers, so a resume that runs no stage runs no Spark job.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from functools import cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators import canonicalize as C
 from ..operators import extract as X
 from ..operators import graph_build as GB
 from ..operators import link as L
 from ..sources.graph_store import GraphStore
-from .lineage import partition_lineage
-
-
-@dataclass
-class PipelineResult:
-    run_id: str
-    stages_run: list[str] = field(default_factory=list)
-    stages_skipped: list[str] = field(default_factory=list)
-    counts: dict[str, int] = field(default_factory=dict)
+from .lineage import PipelineResult, lineage_rows, run_stage, write_lineage
 
 
 def run(
@@ -49,48 +44,33 @@ def run(
     enable_lsh_canonicalization: bool = True,
     bucketed_query_tables: bool = True,
 ) -> PipelineResult:
+    """Build (or resume) one graph. ``counts`` holds the rows of triples,
+    mentions and this graph's nodes and edges. Only a run in which some stage
+    ran rewrites ``metrics``: one LINEAGE_SCHEMA row per (stage, write
+    partition), ``partition_id`` being the task that wrote the file."""
+    from ..operators import retrieval as R
+
     res = PipelineResult(run_id=run_id)
-    metrics_parts: list[DataFrame] = []
+    # each table is read (one schema job) once, after the stage that commits
+    # it: no stage of this run rewrites a table that a later stage reads
+    read = cache(store.read)
 
-    def stage(name: str, compute, *, write):
-        """Run-or-skip wrapper: compute() → write() → manifest mark."""
-        if store.is_done(name, graph_id):
-            res.stages_skipped.append(name)
-            return None
-        out = compute()
-        write(out)
-        store.mark_done(name, graph_id, run_id=run_id)
-        res.stages_run.append(name)
-        return out
+    def snapshot(table: str):
+        return lambda df: store.write_snapshot(table, df, partition_by=())
 
-    # --- extract ---------------------------------------------------------------
-    def compute_extract():
-        raw = X.extract_raw(X.explode_spans(docs))
-        return raw
+    def graph_table(table: str) -> DataFrame:
+        return read(table).filter(F.col("graph_id") == graph_id)
 
-    stage(
-        "extract",
-        compute_extract,
-        write=lambda df: store.write_snapshot("raw_extract", df, partition_by=()),
-    )
-    raw = store.read("raw_extract")
-    metrics_parts.append(partition_lineage(raw, run_id, "extract"))
-
-    # --- resolve ---------------------------------------------------------------
-    stage(
-        "resolve_triples",
-        lambda: X.resolve_triples(spark, raw),
-        write=lambda df: store.write_snapshot("triples", df, partition_by=()),
-    )
-    stage(
-        "resolve_mentions",
-        lambda: X.resolve_mentions(spark, raw),
-        write=lambda df: store.write_snapshot("mentions", df, partition_by=()),
-    )
-    triples = store.read("triples")
-    mentions = store.read("mentions")
-    metrics_parts.append(partition_lineage(triples, run_id, "resolve_triples"))
-    metrics_parts.append(partition_lineage(mentions, run_id, "resolve_mentions"))
+    # --- extract / resolve ------------------------------------------------------
+    run_stage(store, res, "extract", graph_id,
+              lambda: X.extract_raw(X.explode_spans(docs)),
+              snapshot("raw_extract"))
+    run_stage(store, res, "resolve_triples", graph_id,
+              lambda: X.resolve_triples(spark, read("raw_extract")),
+              snapshot("triples"))
+    run_stage(store, res, "resolve_mentions", graph_id,
+              lambda: X.resolve_mentions(spark, read("raw_extract")),
+              snapshot("mentions"))
 
     # --- canonicalize ------------------------------------------------------------
     def compute_canonical():
@@ -108,7 +88,8 @@ def run(
 
         aliases = F.broadcast(X.alias_df(spark))
         surfaces = (
-            raw.select(F.explode("mentions").alias("m"))
+            read("raw_extract")
+            .select(F.explode("mentions").alias("m"))
             .select(F.col("m.surface").alias("surface"))
             .distinct()
             .join(aliases, "surface", "left")
@@ -142,29 +123,14 @@ def run(
             )
         )
 
-    stage(
-        "canonicalize",
-        compute_canonical,
-        write=lambda df: store.write_snapshot("canonical_map", df, partition_by=()),
-    )
+    run_stage(store, res, "canonicalize", graph_id, compute_canonical,
+              snapshot("canonical_map"))
 
     # --- materialize --------------------------------------------------------------
-    def compute_graph():
-        nodes = GB.semantic_nodes(mentions, graph_id)
-        edges = GB.semantic_edges(triples, graph_id)
-        return nodes, edges
-
-    if store.is_done("materialize", graph_id):
-        res.stages_skipped.append("materialize")
-    else:
-        nodes, edges = compute_graph()
-        store.store_graph(nodes, edges)
-        store.mark_done("materialize", graph_id, run_id=run_id)
-        res.stages_run.append("materialize")
-    nodes = store.read("nodes").filter(F.col("graph_id") == graph_id)
-    edges = store.read("edges").filter(F.col("graph_id") == graph_id)
-    metrics_parts.append(partition_lineage(nodes, run_id, "materialize_nodes"))
-    metrics_parts.append(partition_lineage(edges, run_id, "materialize_edges"))
+    run_stage(store, res, "materialize", graph_id,
+              lambda: (GB.semantic_nodes(read("mentions"), graph_id),
+                       GB.semantic_edges(read("triples"), graph_id)),
+              lambda graph: store.store_graph(*graph))
 
     # --- entity index (fulltext parity) ----------------------------------------
     # Materialize-time token inverted index over node labels (the Neo4j
@@ -173,13 +139,9 @@ def run(
     # instead of scanning nodes. Incremental: only THIS graph's index
     # partition is committed (same partition-scoped protocol as nodes/edges),
     # other graphs' index partitions are carried by manifest reference.
-    from ..operators import retrieval as R
-
-    stage(
-        "entity_index",
-        lambda: nodes,
-        write=lambda df: R.update_entity_index(store, df, graph_id),
-    )
+    run_stage(store, res, "entity_index", graph_id,
+              lambda: graph_table("nodes"),
+              lambda df: R.update_entity_index(store, df, graph_id))
 
     # --- bucketize (default-on; disable for one-shot graphs) ---------------------
     # Query-side acceleration: nodes bucketed+sorted on node_id, edges on src,
@@ -189,42 +151,39 @@ def run(
     if bucketed_query_tables:
         from ..operators import bucketing as B
 
-        nt, et = f"{graph_id}_nodes_bucketed", f"{graph_id}_edges_bucketed"
-        if store.is_done("bucketize", graph_id):
-            # resume in a NEW session: the files are on disk but bucket
-            # metadata is catalog (per-session) state — re-declare the spec
-            # over the existing files, zero data writes
-            for name, path, cols in (
-                (nt, f"{store.root}/bucketed/{graph_id}_nodes", ["node_id"]),
-                (et, f"{store.root}/bucketed/{graph_id}_edges", ["src"]),
-            ):
-                if not spark.catalog.tableExists(name):
-                    B.register_bucketed(spark, name, path, cols, 16)
-            res.stages_skipped.append("bucketize")
-        else:
-            B.write_bucketed(
-                nodes, nt, ["node_id"], 16,
-                path=f"{store.root}/bucketed/{graph_id}_nodes",
-            )
-            B.write_bucketed(
-                edges, et, ["src"], 16,
-                path=f"{store.root}/bucketed/{graph_id}_edges",
-            )
-            store.mark_done("bucketize", graph_id, run_id=run_id)
-            res.stages_run.append("bucketize")
+        specs = {  # table → (catalog name, path, bucket columns)
+            t: (f"{graph_id}_{t}_bucketed", f"{store.root}/bucketed/{graph_id}_{t}", [col])
+            for t, col in (("nodes", "node_id"), ("edges", "src"))
+        }
 
-    # --- metrics -------------------------------------------------------------------
-    all_metrics = metrics_parts[0]
-    for p in metrics_parts[1:]:
-        all_metrics = all_metrics.unionByName(p)
-    store.write_snapshot("metrics", all_metrics, partition_by=())
+        def write_bucketed(frames):
+            for t, (name, path, cols) in specs.items():
+                B.write_bucketed(frames[t], name, cols, 16, path=path)
 
-    res.counts = {
-        "triples": triples.count(),
-        "mentions": mentions.count(),
-        "nodes": nodes.count(),
-        "edges": edges.count(),
+        run_stage(store, res, "bucketize", graph_id,
+                  lambda: {t: graph_table(t) for t in specs}, write_bucketed)
+        # resume in a NEW session: the files are on disk but bucket metadata
+        # is catalog (per-session) state — re-declare the spec over the
+        # existing files, zero data writes
+        for name, path, cols in specs.values():
+            if not spark.catalog.tableExists(name):
+                B.register_bucketed(spark, name, path, cols, 16)
+
+    # --- counts and lineage, from the committed files' footers --------------------
+    lineage = {
+        table: lineage_rows(store, run_id, stage, table, gid)
+        for stage, table, gid in (
+            ("extract", "raw_extract", None),
+            ("resolve_triples", "triples", None),
+            ("resolve_mentions", "mentions", None),
+            ("materialize_nodes", "nodes", graph_id),
+            ("materialize_edges", "edges", graph_id),
+        )
     }
+    res.counts = {t: sum(r[-1] for r in lineage[t])
+                  for t in ("triples", "mentions", "nodes", "edges")}
+    if res.stages_run:
+        write_lineage(store, "metrics", [r for rows in lineage.values() for r in rows])
     return res
 
 
@@ -248,24 +207,13 @@ def run_incremental(
     files instead of rewriting the partition; same call site).
 
     Re-running the same run_id is a no-op (manifest guard); per-run triple /
-    mention snapshots keep lineage per increment."""
+    mention snapshots keep lineage per increment, and ``counts`` come from
+    their footers."""
+    from ..operators import retrieval as R
+
     res = PipelineResult(run_id=run_id)
-    if store.is_done("incremental", f"{graph_id}::{run_id}"):
-        res.stages_skipped.append("incremental")
-        return res
+    triples_t, mentions_t = f"triples_{run_id}", f"mentions_{run_id}"
 
-    raw = X.extract_raw(X.explode_spans(new_docs))
-    triples_new = X.resolve_triples(spark, raw)
-    mentions_new = X.resolve_mentions(spark, raw)
-    store.write_snapshot(f"triples_{run_id}", triples_new, partition_by=())
-    store.write_snapshot(f"mentions_{run_id}", mentions_new, partition_by=())
-    triples_new = store.read(f"triples_{run_id}")
-    mentions_new = store.read(f"mentions_{run_id}")
-
-    nodes_new = GB.semantic_nodes(mentions_new, graph_id)
-    edges_new = GB.semantic_edges(triples_new, graph_id)
-    old_nodes = store.read_partition("nodes", graph_id) if store.exists("nodes") else None
-    old_edges = store.read_partition("edges", graph_id) if store.exists("edges") else None
     # WHOLE-row dedup, not key-column dedup: node/edge rows are pure
     # functions of the entity/triple, so identical rows are true re-unions
     # (doc seen in both batches) while rows that merely collide in the
@@ -273,37 +221,37 @@ def run_incremental(
     # survive — exactly what a from-scratch run keeps. Map-typed columns
     # (props) can't be dedup keys; they too are pure functions of the
     # remaining columns, so dropping on the non-map set is equivalent.
-    from pyspark.sql import types as _T
+    def fold(table: str, new: DataFrame) -> DataFrame:
+        old = store.read_partition(table, graph_id) if store.exists(table) else None
+        if old is None:
+            return new
+        both = old.unionByName(new, allowMissingColumns=True)
+        return both.dropDuplicates([
+            f.name for f in both.schema.fields
+            if not isinstance(f.dataType, T.MapType)
+        ])
 
-    def _dedup_all(df: DataFrame) -> DataFrame:
-        keys = [
-            f.name for f in df.schema.fields
-            if not isinstance(f.dataType, _T.MapType)
-        ]
-        return df.dropDuplicates(keys)
-
-    if old_nodes is not None:
-        nodes_new = _dedup_all(
-            old_nodes.unionByName(nodes_new, allowMissingColumns=True)
+    def compute():
+        raw = X.extract_raw(X.explode_spans(new_docs))
+        store.write_snapshot(triples_t, X.resolve_triples(spark, raw), partition_by=())
+        store.write_snapshot(mentions_t, X.resolve_mentions(spark, raw), partition_by=())
+        return (
+            fold("nodes", GB.semantic_nodes(store.read(mentions_t), graph_id)),
+            fold("edges", GB.semantic_edges(store.read(triples_t), graph_id)),
         )
-    if old_edges is not None:
-        edges_new = _dedup_all(
-            old_edges.unionByName(edges_new, allowMissingColumns=True)
-        )
-    store.store_graph(nodes_new, edges_new)
-    # keep the fulltext index consistent with the folded-in nodes (same
-    # invariant as run()'s entity_index stage: index == f(current partition))
-    from ..operators import retrieval as R
 
-    R.refresh_entity_index(store, graph_id)
+    def write(graph):
+        store.store_graph(*graph)
+        # keep the fulltext index consistent with the folded-in nodes (same
+        # invariant as run()'s entity_index stage: index == f(current partition))
+        R.refresh_entity_index(store, graph_id)
+        write_lineage(store, f"metrics_{run_id}",
+                      lineage_rows(store, run_id, "incremental_triples", triples_t))
 
-    metrics = partition_lineage(triples_new, run_id, "incremental_triples")
-    store.write_snapshot(f"metrics_{run_id}", metrics, partition_by=())
-    store.mark_done("incremental", f"{graph_id}::{run_id}", run_id=run_id)
-    res.stages_run.append("incremental")
+    run_stage(store, res, "incremental", f"{graph_id}::{run_id}", compute, write)
     res.counts = {
-        "new_triples": triples_new.count(),
-        "new_mentions": mentions_new.count(),
+        "new_triples": sum(n for _, n in store.file_rows(triples_t)),
+        "new_mentions": sum(n for _, n in store.file_rows(mentions_t)),
     }
     return res
 
@@ -325,40 +273,38 @@ def run_full(
     Returns the semantic PipelineResult augmented with merge stats in
     ``counts`` (A20)."""
     from ..operators import network as N
+    from ..operators import retrieval as R
 
     res = run(spark, docs, store, graph_id=semantic_graph_id, run_id=run_id,
               enable_lsh_canonicalization=False)
 
-    if not store.is_done("telemetry", telemetry_graph_id):
+    def compute_telemetry():
         conns = N.score_connections(N.parse_logs(logs))
-        t_nodes = GB.telemetry_nodes(conns, telemetry_graph_id)
-        t_edges = GB.telemetry_edges(conns, telemetry_graph_id)
-        store.store_graph(t_nodes, t_edges)
-        from ..operators import retrieval as R
+        return (GB.telemetry_nodes(conns, telemetry_graph_id),
+                GB.telemetry_edges(conns, telemetry_graph_id))
 
+    def write_telemetry(graph):
+        store.store_graph(*graph)
         R.refresh_entity_index(store, telemetry_graph_id)
-        store.mark_done("telemetry", telemetry_graph_id, run_id=run_id)
-        res.stages_run.append("telemetry")
-    else:
-        res.stages_skipped.append("telemetry")
 
-    if not store.is_done("merge", merged_graph_id):
-        nodes = store.read("nodes")
-        edges = store.read("edges")
-        sn = nodes.filter(F.col("graph_id") == semantic_graph_id)
-        se = edges.filter(F.col("graph_id") == semantic_graph_id)
-        tn = nodes.filter(F.col("graph_id") == telemetry_graph_id)
-        te = edges.filter(F.col("graph_id") == telemetry_graph_id)
-        mn, me, stats = GB.merge_graphs(sn, se, tn, te, merged_graph_id)
+    run_stage(store, res, "telemetry", telemetry_graph_id, compute_telemetry,
+              write_telemetry)
+
+    def compute_merge():
+        nodes, edges = store.read("nodes"), store.read("edges")
+        sem = F.col("graph_id") == semantic_graph_id
+        tel = F.col("graph_id") == telemetry_graph_id
+        return GB.merge_graphs(nodes.filter(sem), edges.filter(sem),
+                               nodes.filter(tel), edges.filter(tel),
+                               merged_graph_id)
+
+    def write_merge(merged):
+        mn, me, stats = merged
         store.store_graph(mn, me)
-        from ..operators import retrieval as R
-
         R.refresh_entity_index(store, merged_graph_id)
         store.write_snapshot("merge_stats", stats, partition_by=())
-        store.mark_done("merge", merged_graph_id, run_id=run_id)
-        res.stages_run.append("merge")
-    else:
-        res.stages_skipped.append("merge")
+
+    run_stage(store, res, "merge", merged_graph_id, compute_merge, write_merge)
 
     for r in store.read("merge_stats").collect():
         res.counts[f"merge_{r.stat}"] = r.value

@@ -45,6 +45,7 @@ import time
 
 from urllib.parse import unquote
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -263,6 +264,31 @@ class GraphStore:
 
     def exists(self, table: str) -> bool:
         return self.current_snapshot(table) is not None
+
+    def file_rows(self, table: str,
+                  graph_id: str | None = None) -> list[tuple[int, int]]:
+        """``(write partition, rows)`` per ``part-NNNNN-*.parquet`` file of the
+        current snapshot (``graph_id``'s partition only, when given), rows
+        read from the parquet footers: no Spark job. The write partition is
+        the file name's ``NNNNN``, the task that wrote the file."""
+        snap = self.current_snapshot(table)
+        if snap is None:
+            return []
+        manifest = self._load_partition_manifest(table, snap)
+        if manifest is not None:
+            parts = manifest["partitions"]
+            dirs = [os.path.join(self._data_dir(table), p) for g, p in parts.items()
+                    if graph_id in (None, g)]
+        else:  # whole-dir snapshot; a legacy graph table is graph_id-partitioned
+            base = self._snapshot_path(table, snap)
+            dirs = [base] if graph_id is None else [
+                os.path.join(base, d) for d in os.listdir(base)
+                if _unescape_partition(d) == f"graph_id={graph_id}"]
+        return [
+            (int(f.split("-")[1]), pq.ParquetFile(os.path.join(root, f)).metadata.num_rows)
+            for d in dirs for root, _, files in os.walk(d) for f in sorted(files)
+            if f.startswith("part-") and f.endswith(".parquet")
+        ]
 
     # --- graph API (S10-S13) ---------------------------------------------------
 

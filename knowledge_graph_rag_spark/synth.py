@@ -131,11 +131,6 @@ def gen_doc(i: int) -> dict:
     return {"doc_id": doc_id, "spans": spans}
 
 
-def gen_documents_pdf(n_docs: int, start: int = 0) -> pd.DataFrame:
-    """Pandas frame of interleaved docs [start, start+n_docs)."""
-    return pd.DataFrame([gen_doc(i) for i in range(start, start + n_docs)])
-
-
 def documents_df(spark, n_docs: int):
     """Distributed generation: spark.range → mapInPandas(gen_doc).
 

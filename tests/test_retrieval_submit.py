@@ -340,7 +340,7 @@ def test_kg_submit_job(tmp_path):
     assert res2["counts"] == res1["counts"]
 
 
-def test_curation_pipeline_and_resume(spark, tmp_path):
+def test_curation_pipeline_and_resume(spark, tmp_path, count_jobs):
     """Composed training-data curation (plans/datapipe.curate): planted docs
     exercise every stage's drop rule; a second run resumes fully with the
     same counts; the metrics table carries one lineage row per stage."""
@@ -380,9 +380,13 @@ def test_curation_pipeline_and_resume(spark, tmp_path):
     assert set(stats) == kept
     assert all(s.ws_tokens > 0 and s.bpe_tokens >= s.ws_tokens for s in stats.values())
 
-    res2 = datapipe.curate(spark, docs, store, dataset_id="t", run_id="r2",
-                           near_dup_max_dist=0.5)
+    metrics_snap = store.current_snapshot("dp_t_metrics")
+    with count_jobs() as jobs:
+        res2 = datapipe.curate(spark, docs, store, dataset_id="t", run_id="r2",
+                               near_dup_max_dist=0.5)
     assert not res2.stages_run and res2.counts == res.counts
+    assert jobs == []
+    assert store.current_snapshot("dp_t_metrics") == metrics_snap
     metrics = store.read("dp_t_metrics").collect()
     assert {(m.stage, m.rows_out) for m in metrics} == set(
         (k, v) for k, v in res.counts.items()

@@ -367,7 +367,7 @@ def test_stats_and_quality(spark):
     assert dq2.invalid_labels == 1 and dq2.dangling_edges == 1
 
 
-def test_data_quality_is_lazy_single_plan(spark):
+def test_data_quality_is_lazy_single_plan(spark, count_jobs):
     """A19 must be ONE declarative plan: constructing the result DataFrame
     runs zero Spark jobs (the old shape fired 4 driver-side counts)."""
     from knowledge_graph_rag_spark.operators import stats as ST
@@ -380,13 +380,9 @@ def test_data_quality_is_lazy_single_plan(spark):
         [("g", "e1", "n2", "n1", "USES_PORT")],
         "graph_id string, edge_id string, src string, dst string, rel_type string",
     )
-    sc = spark.sparkContext
-    sc.setJobGroup("dq_lazy_probe", "construction must be lazy")
-    try:
+    with count_jobs() as jobs:
         df = ST.data_quality(nodes, edges)
-    finally:
-        sc.setJobGroup(None, None)
-    assert sc.statusTracker().getJobIdsForGroup("dq_lazy_probe") == []
+    assert jobs == []
     row = df.collect()[0]
     assert (row.invalid_labels, row.orphaned_ports, row.dangling_edges) == (0, 0, 0)
 

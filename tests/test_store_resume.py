@@ -80,6 +80,8 @@ def test_legacy_snapshot_migrated_on_incremental_commit(spark, store):
         with open(os.path.join(path, "_COMMITTED"), "w") as f:
             json.dump({"snapshot": 0}, f)
     assert store._load_partition_manifest("nodes", 0) is None  # truly legacy
+    assert sum(n for _, n in store.file_rows("nodes", "g_old")) == 1
+    assert store.file_rows("nodes", "g_new") == []
     store.store_graph(
         _mini_nodes(spark, "g_new", [("y", "Y", "Person")]),
         _mini_edges(spark, "g_new", [("y", "y", "KNOWS")]),
@@ -293,7 +295,7 @@ def test_delete_graph(spark, store):
     assert store.list_graphs() == ["g2"]
 
 
-def test_pipeline_run_and_resume(spark, store):
+def test_pipeline_run_and_resume(spark, store, count_jobs):
     docs = synth.documents_df(spark, 40)
     res1 = pipeline.run(spark, docs, store, graph_id="kg", run_id="r1",
                         enable_lsh_canonicalization=False)
@@ -302,12 +304,19 @@ def test_pipeline_run_and_resume(spark, store):
     triples1 = store.read("triples")
     c_nodes, c_triples = nodes1.count(), triples1.count()
     assert c_nodes > 0 and c_triples > 0
+    assert (res1.counts["nodes"], res1.counts["triples"]) == (c_nodes, c_triples)
+    metrics_snap = store.current_snapshot("metrics")
 
-    # second run resumes: every stage skipped, outputs identical
-    res2 = pipeline.run(spark, docs, store, graph_id="kg", run_id="r2",
-                        enable_lsh_canonicalization=False)
+    # second run resumes: every stage skipped, outputs identical, and it
+    # neither runs a Spark job nor re-commits lineage under its own run_id
+    with count_jobs() as jobs:
+        res2 = pipeline.run(spark, docs, store, graph_id="kg", run_id="r2",
+                            enable_lsh_canonicalization=False)
     assert not res2.stages_run
     assert set(res2.stages_skipped) >= {"extract", "resolve_triples", "materialize"}
+    assert jobs == []
+    assert res2.counts == res1.counts
+    assert store.current_snapshot("metrics") == metrics_snap
     assert store.read("nodes").count() == c_nodes
     assert store.read("triples").count() == c_triples
 
@@ -331,6 +340,11 @@ def test_pipeline_resume_after_partial_failure(spark, store, tmp_path):
     res = pipeline.run(spark, docs, store, graph_id="kg", run_id="resumed",
                        enable_lsh_canonicalization=False)
     assert "extract" in res.stages_skipped and "materialize" in res.stages_run
+
+    def lineage(s):  # per-(stage, partition) rows
+        return sorted(tuple(r) for r in s.read("metrics").drop("run_id").collect())
+
+    assert lineage(store) == lineage(ref_store)
 
     ref_triples = {tuple(r) for r in ref_store.read("triples").collect()}
     got_triples = {tuple(r) for r in store.read("triples").collect()}
@@ -375,13 +389,14 @@ def test_lineage_metrics_written(spark, store):
     docs = synth.documents_df(spark, 20)
     pipeline.run(spark, docs, store, graph_id="kg", run_id="r1",
                  enable_lsh_canonicalization=False)
-    m = store.read("metrics")
-    stages = {r.stage for r in m.select("stage").distinct().collect()}
-    assert {"extract", "resolve_triples", "materialize_nodes"} <= stages
-    from knowledge_graph_rag_spark.plans.lineage import totals
-
-    t = totals(m).collect()
-    assert all(r.value >= 0 and r.partitions >= 1 for r in t)
+    totals = {r.stage: r.value for r in store.read("metrics").groupBy("stage")
+              .agg(F.sum("value").alias("value")).collect()}
+    assert totals == {
+        stage: store.read(table).count()
+        for stage, table in (("extract", "raw_extract"), ("resolve_triples", "triples"),
+                             ("resolve_mentions", "mentions"),
+                             ("materialize_nodes", "nodes"), ("materialize_edges", "edges"))
+    }
 
 
 def test_run_full_merged_pipeline(spark, store):
