@@ -15,6 +15,9 @@ catalog (Hive/Iceberg) and survive restarts.
 
 from __future__ import annotations
 
+import os
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -45,12 +48,18 @@ def register_bucketed(
     bucket_cols: list[str],
     n_buckets: int = 16,
 ) -> None:
-    """(Re-)register an existing bucketed parquet directory in the session
-    catalog. Bucket metadata is catalog state — a NEW session resuming over a
-    warehouse that already holds bucketed files must re-declare the spec, not
-    rewrite the data (pinned by the kg_submit resume test: the second CLI run
-    performs zero data writes). The declared spec must match how the files
-    were written (write_bucketed), or joins would be silently wrong."""
+    """(Re-)declare the bucket spec of an existing bucketed parquet directory
+    in the session catalog, writing no data (pinned by the kg_submit resume
+    test). The spec must match how the files were written (write_bucketed),
+    or joins would be silently wrong. A no-op when ``table_name`` already
+    points at ``path`` (catalog metadata, no Spark job); a table of that name
+    elsewhere is dropped first, and being external its files stay."""
+    if spark.catalog.tableExists(table_name):
+        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table_name}").collect()
+        location = next(r.data_type for r in rows if r.col_name == "Location")
+        if unquote(urlparse(location).path) == os.path.abspath(path):
+            return
+        spark.sql(f"DROP TABLE {table_name}")
     schema = spark.read.parquet(path).schema
     fields = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields

@@ -40,8 +40,8 @@ def entity_token_index(nodes: DataFrame) -> DataFrame:
     (graph_id, tok_prefix, token, node_id). ``tok_prefix`` (first 2 chars)
     is the partition key: bounded cardinality (≤ ~1.4k over [a-z0-9]²), and a
     word-prefix probe preserves it, so every lookup prunes to one partition
-    instead of scanning 10^12 nodes. Built once at materialize time
-    (write_entity_index); reference analogue: the Neo4j fulltext index the
+    instead of scanning 10^12 nodes. Built at materialize time
+    (update_entity_index); reference analogue: the Neo4j fulltext index the
     RAG service creates on startup (neo4j_service.py:38-53)."""
     toks = nodes.select(
         "graph_id",
@@ -61,19 +61,6 @@ def entity_token_index(nodes: DataFrame) -> DataFrame:
         ).alias("token"),
     )
     return toks.withColumn("tok_prefix", F.substring("token", 1, 2))
-
-
-def write_entity_index(store, nodes: DataFrame) -> int:
-    """Materialize the inverted index as a parquet table partitioned by
-    (graph_id, tok_prefix), token-sorted within files so parquet min/max
-    stats skip row groups inside a partition. Full rebuild — for per-graph
-    incremental maintenance use update_entity_index."""
-    return store.write_snapshot(
-        ENTITY_INDEX_TABLE,
-        entity_token_index(nodes),
-        partition_by=("graph_id", "tok_prefix"),
-        sort_within=("token",),
-    )
 
 
 def update_entity_index(store, nodes: DataFrame, graph_id: str) -> int:

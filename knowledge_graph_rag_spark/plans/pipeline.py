@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from functools import cache
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -162,12 +163,10 @@ def run(
 
         run_stage(store, res, "bucketize", graph_id,
                   lambda: {t: graph_table(t) for t in specs}, write_bucketed)
-        # resume in a NEW session: the files are on disk but bucket metadata
-        # is catalog (per-session) state — re-declare the spec over the
-        # existing files, zero data writes
+        # bucket metadata is per-session catalog state: a resume re-declares
+        # the spec over this warehouse's files, zero data writes
         for name, path, cols in specs.values():
-            if not spark.catalog.tableExists(name):
-                B.register_bucketed(spark, name, path, cols, 16)
+            B.register_bucketed(spark, name, path, cols, 16)
 
     # --- counts and lineage, from the committed files' footers --------------------
     lineage = {
@@ -306,6 +305,7 @@ def run_full(
 
     run_stage(store, res, "merge", merged_graph_id, compute_merge, write_merge)
 
-    for r in store.read("merge_stats").collect():
-        res.counts[f"merge_{r.stat}"] = r.value
+    # a few rows, read with pyarrow: a full-skip resume runs no Spark job
+    stats = pq.read_table(store._snapshot_path("merge_stats", store.current_snapshot("merge_stats")))
+    res.counts.update({f"merge_{r['stat']}": r["value"] for r in stats.to_pylist()})
     return res

@@ -105,7 +105,7 @@ def test_entity_search_indexed(kg, spark, tmp_path):
 
     nodes, _ = kg
     store = GraphStore(spark, str(tmp_path / "wh"))
-    R.write_entity_index(store, nodes)
+    R.update_entity_index(store, nodes, "kg")
     index = store.read(R.ENTITY_INDEX_TABLE)
 
     for probe in ("acme", "springfield"):

@@ -321,6 +321,37 @@ def test_pipeline_run_and_resume(spark, store, count_jobs):
     assert store.read("triples").count() == c_triples
 
 
+def test_bucketed_tables_follow_the_resumed_warehouse(spark, tmp_path, count_jobs):
+    """The ``<graph_id>_{nodes,edges}_bucketed`` catalog tables are session
+    state named by graph_id alone: resuming warehouse B after warehouse A
+    built the same graph_id points them back at B's files."""
+    wh_b = GraphStore(spark, str(tmp_path / "wh_b"))
+    wh_a = GraphStore(spark, str(tmp_path / "wh_a"))
+    docs_b, docs_a = synth.documents_df(spark, 20), synth.documents_df(spark, 40)
+    try:
+        pipeline.run(spark, docs_b, wh_b, graph_id="g", run_id="b1",
+                     enable_lsh_canonicalization=False)
+        pipeline.run(spark, docs_a, wh_a, graph_id="g", run_id="a1",
+                     enable_lsh_canonicalization=False)
+        res = pipeline.run(spark, docs_b, wh_b, graph_id="g", run_id="b2",
+                           enable_lsh_canonicalization=False)
+        assert not res.stages_run
+        # A's graph differs from B's, so a table left at A's files shows
+        assert wh_a.read("nodes").count() != wh_b.read("nodes").count()
+        for table in ("nodes", "edges"):
+            want = wh_b.read_partition(table, "g")
+            got = spark.table(f"g_{table}_bucketed").select(*want.columns)
+            assert {tuple(r) for r in got.collect()} == {tuple(r) for r in want.collect()}
+        # once they point at B, a resume of B leaves them be: no job
+        with count_jobs() as jobs:
+            pipeline.run(spark, docs_b, wh_b, graph_id="g", run_id="b3",
+                         enable_lsh_canonicalization=False)
+        assert jobs == []
+    finally:
+        spark.sql("DROP TABLE IF EXISTS g_nodes_bucketed")
+        spark.sql("DROP TABLE IF EXISTS g_edges_bucketed")
+
+
 def test_pipeline_resume_after_partial_failure(spark, store, tmp_path):
     """Kill-after-stage-k contract: mark only the extract stage done, re-run,
     and the final tables must equal an uninterrupted run's."""
@@ -399,7 +430,7 @@ def test_lineage_metrics_written(spark, store):
     }
 
 
-def test_run_full_merged_pipeline(spark, store):
+def test_run_full_merged_pipeline(spark, store, count_jobs):
     from knowledge_graph_rag_spark.operators.graph_build import find_correlations
     from knowledge_graph_rag_spark.plans.pipeline import run_full
 
@@ -414,9 +445,12 @@ def test_run_full_merged_pipeline(spark, store):
     corr = find_correlations(merged_nodes).collect()
     assert corr and all(len(r.sources) > 1 for r in corr)
 
-    # resume: everything skipped
-    res2 = run_full(spark, docs, logs, store, run_id="rf2")
+    # resume: everything skipped, no Spark job, the first run's counts
+    with count_jobs() as jobs:
+        res2 = run_full(spark, docs, logs, store, run_id="rf2")
     assert not res2.stages_run
+    assert jobs == []
+    assert res2.counts == res.counts
 
 
 def test_canonicalize_never_links_telemetry(spark, store):
