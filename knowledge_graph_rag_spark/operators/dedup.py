@@ -639,13 +639,16 @@ def minhash_index_probe(
     so an index that already contains the probe batch can be probed
     idempotently.
 
-    ``jaccard_max_dist``: when set, pairs are filtered by matching-band
-    fraction — Spark's MinHash ``approxSimilarityJoin`` keyDistance is
-    1 − matches/numHashTables, so this replicates
-    ``minhash_lsh_pairs(jaccard_max_dist)`` semantics over the persisted
-    index. ``bucket_cap``: skip index (band, bucket) groups larger than
-    this — bounds the join fan-out when one degenerate boilerplate bucket
-    accrues O(corpus) members (documented recall tail, same philosophy as
+    ``jaccard_max_dist``: when set, a pair must share at least
+    ``ceil((1 − jaccard_max_dist) · numHashTables)`` bands, i.e. its MinHash
+    ESTIMATE of Jaccard distance (1 − matching bands / numHashTables) is
+    within the bound. This is not ``minhash_lsh_pairs(jaccard_max_dist)``:
+    ``approxSimilarityJoin`` keeps a candidate by the EXACT Jaccard distance
+    of the hashed shingle sets, so a pair whose band agreement departs from
+    its true similarity passes one rule and fails the other.
+    ``bucket_cap``: skip index (band, bucket) groups larger than this —
+    bounds the join fan-out when one degenerate boilerplate bucket accrues
+    O(corpus) members (documented recall tail, same philosophy as
     _cap_band_buckets)."""
     from pyspark.sql import Window
 

@@ -13,6 +13,8 @@ aggregated (tiny) frame.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -113,7 +115,7 @@ def detect_fan_out(nodes: DataFrame, edges: DataFrame, limit: int = 20) -> DataF
             .alias("severity"),
         )
         .orderBy(F.desc("unique_ports"), "entity", "destination")
-        .limit(limit)
+        .limit(10)
     )
 
 
@@ -219,29 +221,48 @@ def undirected_edges(edges: DataFrame) -> DataFrame:
 
 
 def two_hop_paths(edges: DataFrame, from_id: str, to_id: str) -> DataFrame:
-    """J7: bounded 1..2-hop undirected paths between two node ids — one self
-    join (e1.dst = e2.src), both directions via the symmetrized edge list."""
+    """J7: bounded 1..2-hop undirected paths between two node ids."""
+    return paths_among(edges, [(from_id, to_id)])
+
+
+def paths_among(edges: DataFrame, pairs: list[tuple[str, str]]) -> DataFrame:
+    """Bounded 1..2-hop undirected paths between each ``(from, to)`` id pair
+    — one self join per pair (e1.dst = e2.src), both directions via the
+    symmetrized edge list. Parallel edges repeat a path, so rows are deduped
+    by path before the limit: one row per path with the smallest ``rels``,
+    the first 10 by (hops, path)."""
     und = undirected_edges(edges)
-    one = (
-        und.filter((F.col("src") == from_id) & (F.col("dst") == to_id))
-        .select(
-            F.lit(1).alias("hops"),
-            F.array(F.col("src"), F.col("dst")).alias("path"),
-            F.array(F.col("rel_type")).alias("rels"),
+    rows = []
+    for from_id, to_id in pairs:
+        rows.append(
+            und.filter((F.col("src") == from_id) & (F.col("dst") == to_id))
+            .select(
+                F.lit(1).alias("hops"),
+                F.array(F.col("src"), F.col("dst")).alias("path"),
+                F.array(F.col("rel_type")).alias("rels"),
+            )
         )
-    )
-    e1 = und.filter(F.col("src") == from_id).alias("e1")
-    e2 = und.filter(F.col("dst") == to_id).alias("e2")
-    two = (
-        e1.join(e2, F.col("e1.dst") == F.col("e2.src"))
-        .filter(F.col("e1.dst") != to_id)
-        .select(
-            F.lit(2).alias("hops"),
-            F.array(F.col("e1.src"), F.col("e1.dst"), F.col("e2.dst")).alias("path"),
-            F.array(F.col("e1.rel_type"), F.col("e2.rel_type")).alias("rels"),
+        e1 = und.filter(F.col("src") == from_id).alias("e1")
+        e2 = und.filter(F.col("dst") == to_id).alias("e2")
+        rows.append(
+            e1.join(e2, F.col("e1.dst") == F.col("e2.src"))
+            .filter(F.col("e1.dst") != to_id)
+            .select(
+                F.lit(2).alias("hops"),
+                F.array(F.col("e1.src"), F.col("e1.dst"), F.col("e2.dst")).alias("path"),
+                F.array(F.col("e1.rel_type"), F.col("e2.rel_type")).alias("rels"),
+            )
         )
+    if not rows:
+        return edges.sparkSession.createDataFrame(
+            [], "hops int, path array<string>, rels array<string>"
+        )
+    return (
+        reduce(DataFrame.unionByName, rows)
+        .groupBy("hops", "path").agg(F.min("rels").alias("rels"))
+        .orderBy("hops", "path")
+        .limit(10)
     )
-    return one.unionByName(two).orderBy("hops").limit(10)
 
 
 def k_hop_reach(edges: DataFrame, rel_type: str, target_type_nodes: DataFrame,

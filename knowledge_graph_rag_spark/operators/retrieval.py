@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .detectors import two_hop_paths
+from .detectors import paths_among
 
 
 def entity_search(nodes: DataFrame, text: str, limit: int = 20) -> DataFrame:
@@ -63,7 +63,7 @@ def entity_token_index(nodes: DataFrame) -> DataFrame:
     return toks.withColumn("tok_prefix", F.substring("token", 1, 2))
 
 
-def update_entity_index(store, nodes: DataFrame, graph_id: str) -> int:
+def update_entity_index(store, nodes: DataFrame, graph_id: str) -> None:
     """Incremental index maintenance: rewrite ONLY ``graph_id``'s index
     partition (the same partition-scoped commit protocol as nodes/edges), so
     re-materializing one graph on a 10k-graph warehouse touches one
@@ -74,7 +74,7 @@ def update_entity_index(store, nodes: DataFrame, graph_id: str) -> int:
     # OLD index partition forward by manifest reference — a stale index that
     # violates index == f(current nodes). Written data still wins when
     # nonempty (drop_ids is ignored for partitions present in df).
-    return store.upsert_graph_partitions(
+    store.upsert_graph_partitions(
         ENTITY_INDEX_TABLE, df,
         sort_within=("token",), sub_partition=("tok_prefix",),
         drop_ids=(graph_id,),
@@ -173,22 +173,11 @@ def paths_between(nodes: DataFrame, edges: DataFrame, label_a: str, label_b: str
                   max_pairs: int = 3) -> DataFrame:
     """Bounded 1..2-hop paths between entities matched by label — the
     reference caps candidate pairs at 3 and depth at 2 to avoid blow-up
-    (rag_service.py:170-197); same bounds here."""
+    (rag_service.py:170-197); same bounds here. Up to 10 distinct paths over
+    all candidate pairs, ordered by (hops, path)."""
     a_ids = [r.node_id for r in entity_search(nodes, label_a, max_pairs).collect()]
     b_ids = [r.node_id for r in entity_search(nodes, label_b, max_pairs).collect()]
-    out = None
-    for a in a_ids:
-        for b in b_ids:
-            if a == b:
-                continue
-            p = two_hop_paths(edges, a, b)
-            out = p if out is None else out.unionByName(p)
-    if out is None:
-        spark = nodes.sparkSession
-        return spark.createDataFrame(
-            [], "hops int, path array<string>, rels array<string>"
-        )
-    return out.dropDuplicates(["path"]).orderBy("hops").limit(10)
+    return paths_among(edges, [(a, b) for a in a_ids for b in b_ids if a != b])
 
 
 def graph_overview(nodes: DataFrame, edges: DataFrame) -> DataFrame:

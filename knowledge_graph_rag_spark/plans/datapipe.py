@@ -134,8 +134,7 @@ def curate(
     # configuration. ONE config slot per dataset holds the fingerprint:
     # - stages done + slot mismatch → refuse (new dataset_id to re-curate);
     # - stages done + NO slot (dataset from before this guard) → adopt the
-    #   current knobs into the slot (legacy migration, same policy as the
-    #   GraphStore legacy-snapshot migration);
+    #   current knobs into the slot (legacy migration);
     # - nothing done → (re)write the slot freely — a crashed zero-stage run
     #   must not whitelist its config forever (single slot, overwritten).
     import hashlib as _hl
@@ -201,7 +200,7 @@ def curate(
 
     def stage(name: str, compute) -> str:
         run_stage(store, res, name, dataset_id, compute,
-                  lambda df: store.write_snapshot(tbl(name), df, partition_by=()),
+                  lambda df: store.write_snapshot(tbl(name), df),
                   key=f"dp_{name}")
         res.counts[name] = sum(n for _, n in store.file_rows(tbl(name)))
         return name
@@ -294,5 +293,5 @@ def curate(
             [(run_id, name, n) for name, n in res.counts.items()],
             "run_id string, stage string, rows_out long",
         )
-        store.write_snapshot(tbl("metrics"), metrics, partition_by=())
+        store.write_snapshot(tbl("metrics"), metrics)
     return res

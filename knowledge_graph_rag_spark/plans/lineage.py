@@ -50,4 +50,4 @@ def lineage_rows(store, run_id: str, stage: str, table: str,
 def write_lineage(store, table: str, rows: list[tuple]) -> None:
     """Commit LINEAGE_SCHEMA rows as a new snapshot of ``table``: one job."""
     df = store.spark.createDataFrame(rows, LINEAGE_SCHEMA)
-    store.write_snapshot(table, df, partition_by=())
+    store.write_snapshot(table, df)

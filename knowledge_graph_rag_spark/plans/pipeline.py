@@ -57,7 +57,7 @@ def run(
     read = cache(store.read)
 
     def snapshot(table: str):
-        return lambda df: store.write_snapshot(table, df, partition_by=())
+        return lambda df: store.write_snapshot(table, df)
 
     def graph_table(table: str) -> DataFrame:
         return read(table).filter(F.col("graph_id") == graph_id)
@@ -232,8 +232,8 @@ def run_incremental(
 
     def compute():
         raw = X.extract_raw(X.explode_spans(new_docs))
-        store.write_snapshot(triples_t, X.resolve_triples(spark, raw), partition_by=())
-        store.write_snapshot(mentions_t, X.resolve_mentions(spark, raw), partition_by=())
+        store.write_snapshot(triples_t, X.resolve_triples(spark, raw))
+        store.write_snapshot(mentions_t, X.resolve_mentions(spark, raw))
         return (
             fold("nodes", GB.semantic_nodes(store.read(mentions_t), graph_id)),
             fold("edges", GB.semantic_edges(store.read(triples_t), graph_id)),
@@ -301,7 +301,7 @@ def run_full(
         mn, me, stats = merged
         store.store_graph(mn, me)
         R.refresh_entity_index(store, merged_graph_id)
-        store.write_snapshot("merge_stats", stats, partition_by=())
+        store.write_snapshot("merge_stats", stats)
 
     run_stage(store, res, "merge", merged_graph_id, compute_merge, write_merge)
 

@@ -28,8 +28,13 @@ DELETE is a manifest-only commit (zero data writes). A killed write is
 invisible (readers only trust the marker), and reads pin the manifest's file
 set, so concurrent commits never tear a scan.
 
-Tables written with ``partition_by=()`` (raw_extract, triples, metrics, …)
-keep whole-dir snapshots — they are per-run artifacts, not upsert targets.
+Each table has one layout. Graph tables (nodes, edges, the entity index,
+the stream-curation partitions) commit only through
+``upsert_graph_partitions``, and every method that reads or drops their
+partitions refuses, with ValueError, a snapshot that has no partition
+manifest. Tables written with ``write_snapshot`` (raw_extract, triples,
+metrics, …) keep whole-dir snapshots — they are per-run artifacts, not
+upsert targets.
 
 Reads go through ``spark.read.option("basePath", …)`` over the manifest's
 version dirs, so ``graph_id`` stays a partition column and `MATCH`-prefix
@@ -42,18 +47,12 @@ import json
 import os
 import shutil
 import time
-
 from urllib.parse import unquote
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def _unescape_partition(value: str) -> str:
-    """Invert Hive/Spark partition-path escaping (%XX sequences)."""
-    return unquote(value)
 
 
 class GraphStore:
@@ -89,47 +88,64 @@ class GraphStore:
     def _data_dir(self, table: str) -> str:
         return os.path.join(self._table_dir(table), "data")
 
-    def _load_partition_manifest(self, table: str, snap: int) -> dict | None:
-        mpath = os.path.join(self._snapshot_path(table, snap), "_MANIFEST.json")
-        if not os.path.exists(mpath):
-            return None
-        with open(mpath) as f:
-            return json.load(f)
+    def _manifest_file(self, table: str, snap: int) -> str:
+        return os.path.join(self._snapshot_path(table, snap), "_MANIFEST.json")
 
-    def _commit_partitions(
+    def _manifest(self, table: str, snap: int) -> dict:
+        """The partition manifest of graph table ``table`` at ``snap``.
+        Raises ValueError for a whole-dir snapshot: a partition commit over
+        one would drop every graph it holds from later reads."""
+        try:
+            with open(self._manifest_file(table, snap)) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            raise ValueError(
+                f"table {table} snapshot {snap} has no partition manifest: "
+                "it is a whole-dir table, not a graph table"
+            ) from None
+
+    def _commit(self, table: str, snap: int, manifest: dict | None = None) -> None:
+        """Make ``snap`` visible: write its partition manifest (graph tables),
+        then the ``_COMMITTED`` marker — last, as readers trust only it."""
+        spath = self._snapshot_path(table, snap)
+        if manifest is not None:
+            os.makedirs(spath, exist_ok=True)
+            with open(self._manifest_file(table, snap), "w") as f:
+                json.dump(manifest, f, indent=1, sort_keys=True)
+        with open(os.path.join(spath, "_COMMITTED"), "w") as f:
+            json.dump({"snapshot": snap, "committed_at": time.time()}, f)
+
+    def write_snapshot(self, table: str, df: DataFrame) -> int:
+        """Commit ``df`` as a new whole-dir snapshot of ``table`` (per-run
+        artifacts: raw_extract, triples, metrics, …); returns the snapshot
+        id. The _COMMITTED marker is written only after the parquet job
+        succeeds, so partial writes never become visible (resume-safe)."""
+        cur = self.current_snapshot(table)
+        snap = (cur + 1) if cur is not None else 0
+        df.write.mode("overwrite").parquet(self._snapshot_path(table, snap))
+        self._commit(table, snap)
+        return snap
+
+    def upsert_graph_partitions(
         self, table: str, df: DataFrame, *,
-        replace_table: bool, sort_within: tuple[str, ...] = (),
-        drop_ids: tuple[str, ...] = (),
+        sort_within: tuple[str, ...] = (),
         sub_partition: tuple[str, ...] = (),
-    ) -> tuple[int, set[str]]:
-        """Write df's graph_id partitions as immutable ``v=<snap>`` version
-        dirs (ONE Spark job, partitionBy) and commit a manifest referencing
-        them plus — unless ``replace_table`` — every untouched partition's
-        existing files. ``drop_ids`` removes partitions manifest-only (a
-        partition also present in df survives — written data wins).
-        ``sub_partition`` adds secondary partition columns BELOW the version
-        dir (``graph_id=g/v=n/<sub>=x/...``) — commit granularity stays per
+        drop_ids: tuple[str, ...] = (),
+    ) -> set[str]:
+        """The one commit of a graph_id-partitioned table: write df's
+        graph_id partitions as immutable ``v=<snap>`` version dirs (ONE Spark
+        job, partitionBy) and commit a manifest referencing them plus every
+        untouched partition's existing files. ``drop_ids`` removes
+        partitions manifest-only (a partition also present in df survives —
+        written data wins); pass the target graph_id when an empty rebuild
+        must not leave a stale partition referenced. ``sub_partition`` adds
+        secondary partition columns BELOW the version dir
+        (``graph_id=g/v=n/<sub>=x/...``) — commit granularity stays per
         graph_id, while reads still prune on the sub keys (used by the entity
         token index, partitioned (graph_id, tok_prefix)).
-        Returns (snapshot, graph_ids written)."""
+        Returns the graph_ids written."""
         cur = self.current_snapshot(table)
-        old = {}
-        if cur is not None and not replace_table:
-            m = self._load_partition_manifest(table, cur)
-            if m is None:
-                # Legacy whole-dir snapshot (pre-manifest layout): treating it
-                # as an empty table would commit a manifest containing ONLY the
-                # incoming graph_ids, silently dropping every other graph from
-                # subsequent reads. Migrate the legacy snapshot through the
-                # partitioned path first, then apply this incremental commit
-                # on top of the migrated manifest.
-                legacy = self.spark.read.parquet(self._snapshot_path(table, cur))
-                self._commit_partitions(
-                    table, legacy, replace_table=True, sub_partition=sub_partition
-                )
-                cur = self.current_snapshot(table)
-                m = self._load_partition_manifest(table, cur)
-            old = dict(m.get("partitions", {})) if m else {}
+        old = self._manifest(table, cur)["partitions"] if cur is not None else {}
         snap = (cur + 1) if cur is not None else 0
         if sort_within:
             df = df.sortWithinPartitions(*sort_within)
@@ -142,7 +158,7 @@ class GraphStore:
                 continue
             # manifest keys are the UNESCAPED graph_id (Spark hive-escapes
             # special chars in partition dir names: 'a/b' → 'a%2Fb')
-            gid = _unescape_partition(name.split("=", 1)[1])
+            gid = unquote(name.split("=", 1)[1])
             part_dir = os.path.join(self._data_dir(table), name)
             os.makedirs(part_dir, exist_ok=True)
             dest = os.path.join(part_dir, f"v={snap}")
@@ -159,78 +175,16 @@ class GraphStore:
             g: p for g, p in old.items() if g not in changed and g not in drop_ids
         }
         partitions.update(changed)
-        spath = self._snapshot_path(table, snap)
-        os.makedirs(spath, exist_ok=True)
-        manifest = {
-            "partitions": partitions,
-            "schema": df.schema.json(),
-        }
-        with open(os.path.join(spath, "_MANIFEST.json"), "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
-        with open(os.path.join(spath, "_COMMITTED"), "w") as f:
-            json.dump({"snapshot": snap, "committed_at": time.time()}, f)
-        return snap, set(changed)
-
-    def write_snapshot(self, table: str, df: DataFrame,
-                       partition_by: tuple[str, ...] = ("graph_id",),
-                       sort_within: tuple[str, ...] = ()) -> int:
-        """Commit a new snapshot; returns the snapshot id. graph_id-partitioned
-        tables go through the partition-scoped manifest commit (the whole df
-        REPLACES the table — callers upserting a single graph use store_graph
-        / store_graph_merge, which only rewrite affected partitions).
-        Non-partitioned tables keep whole-dir snapshots; the _COMMITTED
-        marker is written only after the parquet job succeeds, so partial
-        writes never become visible (resume-safe).
-
-        ``sort_within`` clusters rows inside each file (the poor man's
-        Z-order): sorting nodes by node_id / edges by src tightens parquet
-        min-max stats so point lookups and range scans skip row groups."""
-        if partition_by[:1] == ("graph_id",):
-            snap, _ = self._commit_partitions(
-                table, df, replace_table=True, sort_within=sort_within,
-                sub_partition=tuple(partition_by[1:]),
-            )
-            return snap
-        cur = self.current_snapshot(table)
-        snap = (cur + 1) if cur is not None else 0
-        path = self._snapshot_path(table, snap)
-        if sort_within:
-            df = df.sortWithinPartitions(*sort_within)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
-        with open(os.path.join(path, "_COMMITTED"), "w") as f:
-            json.dump({"snapshot": snap, "committed_at": time.time()}, f)
-        return snap
-
-    def upsert_graph_partitions(
-        self, table: str, df: DataFrame, *,
-        sort_within: tuple[str, ...] = (),
-        sub_partition: tuple[str, ...] = (),
-        drop_ids: tuple[str, ...] = (),
-    ) -> int:
-        """Partition-scoped commit for DERIVED graph_id-partitioned tables
-        (e.g. the entity token index): rewrites only df's graph_id
-        partitions, carrying every other graph by manifest reference — the
-        same incremental protocol nodes/edges use via store_graph.
-        ``drop_ids`` partitions are dropped from the manifest unless df also
-        writes them (written data wins) — pass the target graph_id when an
-        empty rebuild must not leave a stale partition referenced."""
-        snap, _ = self._commit_partitions(
-            table, df, replace_table=False,
-            sort_within=sort_within, sub_partition=sub_partition,
-            drop_ids=drop_ids,
-        )
-        return snap
+        self._commit(table, snap, {"partitions": partitions, "schema": df.schema.json()})
+        return set(changed)
 
     def read(self, table: str, snapshot: int | None = None) -> DataFrame:
         snap = snapshot if snapshot is not None else self.current_snapshot(table)
         if snap is None:
             raise FileNotFoundError(f"table {table} has no committed snapshot")
-        manifest = self._load_partition_manifest(table, snap)
-        if manifest is None:
+        if not os.path.exists(self._manifest_file(table, snap)):
             return self.spark.read.parquet(self._snapshot_path(table, snap))
+        manifest = self._manifest(table, snap)
         return self._read_manifest_paths(table, manifest, list(manifest["partitions"]))
 
     def read_partition(self, table: str, graph_id: str,
@@ -240,10 +194,7 @@ class GraphStore:
         snap = snapshot if snapshot is not None else self.current_snapshot(table)
         if snap is None:
             return None
-        manifest = self._load_partition_manifest(table, snap)
-        if manifest is None:
-            df = self.read(table, snap)
-            return df.filter(F.col("graph_id") == graph_id)
+        manifest = self._manifest(table, snap)
         if graph_id not in manifest["partitions"]:
             return None
         return self._read_manifest_paths(table, manifest, [graph_id])
@@ -274,16 +225,12 @@ class GraphStore:
         snap = self.current_snapshot(table)
         if snap is None:
             return []
-        manifest = self._load_partition_manifest(table, snap)
-        if manifest is not None:
-            parts = manifest["partitions"]
+        if graph_id is None and not os.path.exists(self._manifest_file(table, snap)):
+            dirs = [self._snapshot_path(table, snap)]
+        else:
+            parts = self._manifest(table, snap)["partitions"]
             dirs = [os.path.join(self._data_dir(table), p) for g, p in parts.items()
                     if graph_id in (None, g)]
-        else:  # whole-dir snapshot; a legacy graph table is graph_id-partitioned
-            base = self._snapshot_path(table, snap)
-            dirs = [base] if graph_id is None else [
-                os.path.join(base, d) for d in os.listdir(base)
-                if _unescape_partition(d) == f"graph_id={graph_id}"]
         return [
             (int(f.split("-")[1]), pq.ParquetFile(os.path.join(root, f)).metadata.num_rows)
             for d in dirs for root, _, files in os.walk(d) for f in sorted(files)
@@ -302,11 +249,9 @@ class GraphStore:
         nodes) frame came out empty drops the stale partition instead of
         leaving it referenced by the manifest (the written side's gids are
         passed as drop_ids to the other table's commit)."""
-        _, node_gids = self._commit_partitions(
-            "nodes", nodes, replace_table=False, sort_within=("node_id",)
-        )
-        _, edge_gids = self._commit_partitions(
-            "edges", edges, replace_table=False, sort_within=("src", "dst"),
+        node_gids = self.upsert_graph_partitions("nodes", nodes, sort_within=("node_id",))
+        edge_gids = self.upsert_graph_partitions(
+            "edges", edges, sort_within=("src", "dst"),
             drop_ids=tuple(sorted(node_gids)),
         )
         stale_node_gids = edge_gids - node_gids
@@ -330,37 +275,25 @@ class GraphStore:
         inc_nodes = nodes.withColumn("graph_id", F.lit(graph_id))
         inc_edges = edges.withColumn("graph_id", F.lit(graph_id))
 
-        old_part = self.read_partition("nodes", graph_id) if self.exists("nodes") else None
-        if old_part is not None:
-            merged = self._merge_node_partition(old_part, inc_nodes)
-            self._commit_partitions(
-                "nodes", merged, replace_table=False, sort_within=("node_id",)
-            )
-        else:
-            self._commit_partitions(
-                "nodes", inc_nodes, replace_table=False, sort_within=("node_id",)
-            )
+        old_nodes = self.read_partition("nodes", graph_id)
+        if old_nodes is not None:
+            inc_nodes = self._merge_node_partition(old_nodes, inc_nodes)
+        self.upsert_graph_partitions("nodes", inc_nodes, sort_within=("node_id",))
 
-        old_part_e = self.read_partition("edges", graph_id) if self.exists("edges") else None
-        if old_part_e is not None:
-            both_e = old_part_e.withColumn("_prio", F.lit(1)).unionByName(
+        old_edges = self.read_partition("edges", graph_id)
+        if old_edges is not None:
+            both_e = old_edges.withColumn("_prio", F.lit(1)).unionByName(
                 inc_edges.withColumn("_prio", F.lit(2)), allowMissingColumns=True
             )
             w = Window.partitionBy("src", "dst", "rel_type").orderBy(
                 F.desc("_prio"), "edge_id"
             )
-            merged_e = (
+            inc_edges = (
                 both_e.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1)
                 .drop("_rn", "_prio")
             )
-            self._commit_partitions(
-                "edges", merged_e, replace_table=False, sort_within=("src", "dst")
-            )
-        else:
-            self._commit_partitions(
-                "edges", inc_edges, replace_table=False, sort_within=("src", "dst")
-            )
+        self.upsert_graph_partitions("edges", inc_edges, sort_within=("src", "dst"))
 
     @staticmethod
     def _merge_node_partition(old_part: DataFrame, inc: DataFrame) -> DataFrame:
@@ -401,36 +334,16 @@ class GraphStore:
         (SHOW PARTITIONS analogue)."""
         if not self.exists("nodes"):
             return []
-        snap = self.current_snapshot("nodes")
-        manifest = self._load_partition_manifest("nodes", snap)
-        if manifest is not None:
-            return sorted(manifest["partitions"])
-        return sorted(
-            r.graph_id
-            for r in self.read("nodes").select("graph_id").distinct().collect()
-        )
+        return sorted(self._manifest("nodes", self.current_snapshot("nodes"))["partitions"])
 
     def _drop_partitions(self, table: str, graph_ids) -> None:
         """Manifest-only commit removing partitions — no data files read or
-        written. Legacy (manifest-less) snapshots fall back to a filtered
-        rewrite through the partitioned path."""
+        written."""
         cur = self.current_snapshot(table)
-        manifest = self._load_partition_manifest(table, cur)
-        if manifest is None:
-            self.write_snapshot(
-                table,
-                self.read(table).filter(~F.col("graph_id").isin(*graph_ids)),
-            )
-            return
-        snap = cur + 1
+        manifest = self._manifest(table, cur)
         for gid in graph_ids:
             manifest["partitions"].pop(gid, None)
-        spath = self._snapshot_path(table, snap)
-        os.makedirs(spath, exist_ok=True)
-        with open(os.path.join(spath, "_MANIFEST.json"), "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
-        with open(os.path.join(spath, "_COMMITTED"), "w") as f:
-            json.dump({"snapshot": snap, "committed_at": time.time()}, f)
+        self._commit(table, cur + 1, manifest)
 
     def delete_graph(self, graph_id: str) -> None:
         """S13 DETACH DELETE: manifest-only commit dropping the partition —
@@ -454,14 +367,6 @@ class GraphStore:
         index) pass the same ``sub_partition`` the table was written with, or
         the rewrite would flatten the sub-partition dirs and lose those
         columns (they live in the directory names, not the files)."""
-        cur = self.current_snapshot(table)
-        if cur is None or self._load_partition_manifest(table, cur) is None:
-            # a legacy whole-dir snapshot has no partition manifest; a
-            # partial commit here would silently drop every other graph_id
-            raise ValueError(
-                f"table {table} has no partition manifest — rewrite it via "
-                "write_snapshot(partition_by=('graph_id',)) before compacting"
-            )
         part = self.read_partition(table, graph_id)
         if part is None:
             raise FileNotFoundError(f"no partition {graph_id} in {table}")
@@ -470,34 +375,27 @@ class GraphStore:
             part = part.repartition(target_files, *sub_partition)
         else:
             part = part.coalesce(target_files)
-        self._commit_partitions(
-            table, part,
-            replace_table=False, sort_within=sort_within,
-            sub_partition=sub_partition,
+        self.upsert_graph_partitions(
+            table, part, sort_within=sort_within, sub_partition=sub_partition,
         )
 
     def vacuum(self, table: str, keep_last: int = 2) -> list[str]:
-        """Iceberg ``expire_snapshots`` analogue: delete partition version
-        dirs referenced by NO surviving snapshot manifest, keeping the last
-        ``keep_last`` committed snapshots (older snapshot dirs are dropped
-        too). Readers pinned to a surviving snapshot are unaffected — data
-        files are immutable and only unreferenced versions are removed.
-        Returns the deleted version-dir paths."""
+        """Iceberg ``expire_snapshots`` analogue for a graph table: delete
+        partition version dirs referenced by NO surviving snapshot manifest,
+        keeping the last ``keep_last`` committed snapshots (older snapshot
+        dirs are dropped too). Readers pinned to a surviving snapshot are
+        unaffected — data files are immutable and only unreferenced versions
+        are removed. Returns the deleted version-dir paths."""
         snaps = self._snapshots(table)
         if not snaps:
             return []
         keep = snaps[-keep_last:] if keep_last > 0 else snaps[-1:]
         live: set[str] = set()
-        legacy_only = False
         for snap in keep:
-            m = self._load_partition_manifest(table, snap)
-            if m is None:
-                legacy_only = True
-                continue
-            live.update(m.get("partitions", {}).values())
+            live.update(self._manifest(table, snap)["partitions"].values())
         deleted: list[str] = []
         data = self._data_dir(table)
-        if os.path.isdir(data) and not legacy_only:
+        if os.path.isdir(data):
             for part in sorted(os.listdir(data)):
                 pdir = os.path.join(data, part)
                 if not (os.path.isdir(pdir) and part.startswith("graph_id=")):

@@ -67,13 +67,15 @@ def _online_near_dup_drops(
     CC-with-min-representative can merge transitively and drop slightly
     more; the tombstone pass remains available on top.)
 
-    Candidate pairs are distance-filtered EXACTLY like the batch path:
-    Spark's MinHash ``approxSimilarityJoin`` keyDistance is
-    1 − (matching bands / numHashTables), and the bucket join already
-    yields one row per matching band, so requiring
-    ``count(band) ≥ ceil((1 − jaccard_max_dist) · 12)`` per pair replicates
-    ``minhash_lsh_pairs(jaccard_max_dist)`` — a raw single-band collision
-    (the r04-verdict unverified-banding failure mode) is never a verdict.
+    Candidate pairs are distance-filtered by matching-band count: the
+    bucket join yields one row per matching band, and a pair needs
+    ``count(band) ≥ ceil((1 − jaccard_max_dist) · 12)`` — its MinHash
+    ESTIMATE of Jaccard distance within the bound — so a raw single-band
+    collision is never a verdict. This is not the batch rule:
+    ``minhash_lsh_pairs`` (``approxSimilarityJoin``) filters the same
+    candidates by the EXACT Jaccard distance of the hashed shingle sets, so
+    a pair whose band agreement departs from its true similarity can drop
+    here and survive batch ``curate``.
     ``verify_threshold`` additionally confirms survivors by exact trigram
     Jaccard — partner text comes from the accepted docs table via a
     candidate-bounded semi-join, never a full corpus scan."""
@@ -308,8 +310,8 @@ def compact_stream_curation(
     docs = store.read(docs_tbl).select("doc_id", "text")
     drops = _near_dup_drop_ids(docs, near_dup_max_dist, near_dup_strategy,
                                near_dup_verify_threshold)
-    store.write_snapshot(drops_tbl, drops, partition_by=())
-    return store.read(drops_tbl).count()
+    store.write_snapshot(drops_tbl, drops)
+    return sum(n for _, n in store.file_rows(drops_tbl))
 
 
 def read_curated(store: GraphStore, dataset_id: str) -> DataFrame:

@@ -742,7 +742,7 @@ def test_stream_curation_compaction(spark, tmp_path):
     }
 
     n_drops = compact_stream_curation(store, "c1", near_dup_max_dist=0.5)
-    assert n_drops == 1
+    assert n_drops == 1 == store.read("dp_c1_neardup_drops").count()
     curated = {r.doc_id for r in read_curated(store, "c1").collect()}
     assert curated == {"d00", "d01", "d03"}  # min-id representative kept
 
@@ -993,7 +993,7 @@ def test_minhash_index_build_probe_add(spark, tmp_path):
 
 def test_minhash_index_probe_distance_filter(spark, tmp_path):
     """jaccard_max_dist filters candidates by matching-band fraction (the
-    approxSimilarityJoin keyDistance), so a low-overlap pair that collides
+    MinHash estimate of Jaccard distance), so a low-overlap pair that collides
     in one band is a candidate under the raw probe but NOT a verdict under
     the filtered probe; bucket_cap drops degenerate hot buckets."""
     base = ("the patient crane waits beside the shallow river bend while "

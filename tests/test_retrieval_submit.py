@@ -89,11 +89,50 @@ def test_node_info(kg):
     assert all(r.neighbor_label is not None for r in nb)
 
 
-def test_paths_between(kg):
-    nodes, edges = kg
-    paths = R.paths_between(nodes, edges, "Acme", "Springfield").collect()
-    # Acme is the hub org, Springfield the hub location: a path should exist
-    assert paths and all(p.hops <= 2 for p in paths)
+def test_paths_between(spark):
+    """The first 10 distinct 1..2-hop paths over all candidate pairs, by
+    (hops, path), with the smallest rels of each path's parallel edges —
+    equal to a brute force over a graph where parallel edges repeat paths
+    and more than 10 paths exist, at 1 and 8 shuffle partitions."""
+    from collections import defaultdict
+
+    nodes = spark.createDataFrame(
+        [("a1", "Alpha One", "T", "C"), ("a2", "Alpha Two", "T", "C"),
+         ("b1", "Beta One", "T", "C")]
+        + [(f"m{k}", f"Mid {k}", "T", "C") for k in range(8)],
+        "node_id string, label string, type string, entity_class string",
+    )
+    edges = [("a1", "b1", r) for r in ("R2", "R0", "R1")]      # parallel 1-hop
+    edges += [("b1", "a2", "R3")]
+    for k in range(8):
+        edges += [("a1", f"m{k}", "S1"), ("a1", f"m{k}", "S0"),  # parallel hops
+                  (f"m{k}", "b1", "T"), ("a2", f"m{k}", "U")]
+    edf = spark.createDataFrame(edges, "src string, dst string, rel_type string")
+
+    und = defaultdict(list)
+    for s_, d, r in edges:
+        und[s_].append((d, r))
+        und[d].append((s_, r))
+    best = {}
+    for a in ("a1", "a2"):
+        for b in ("b1",):
+            rows = [((a, b), (r,)) for d, r in und[a] if d == b]
+            rows += [((a, m, b), (r1, r2)) for m, r1 in und[a] if m != b
+                     for d, r2 in und[m] if d == b]
+            for path, rels in rows:
+                best[path] = min(rels, best.get(path, rels))
+    assert len(best) > 10
+    want = sorted((len(p) - 1, list(p), list(r)) for p, r in best.items())[:10]
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for n in ("1", "8"):
+            spark.conf.set("spark.sql.shuffle.partitions", n)
+            got = [(r.hops, r.path, r.rels)
+                   for r in R.paths_between(nodes, edf, "Alpha", "Beta").collect()]
+            assert got == want, n
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def test_entity_search_indexed(kg, spark, tmp_path):

@@ -63,40 +63,29 @@ def test_store_graph_rerun_with_empty_edges_drops_stale_partition(spark, store):
     assert store.read("nodes").filter("graph_id = 'g1'").count() == 1
 
 
-def test_legacy_snapshot_migrated_on_incremental_commit(spark, store):
-    """A warehouse written before the manifest layout (whole-dir snapshot, no
-    _MANIFEST.json) must NOT be treated as empty by store_graph /
-    store_graph_merge — the legacy snapshot is migrated through the
-    partitioned path first, so pre-existing graphs survive (ADVICE r02)."""
-    import json
-    import os
-
-    for table, df in (
-        ("nodes", _mini_nodes(spark, "g_old", [("x", "X", "Person")])),
-        ("edges", _mini_edges(spark, "g_old", [("x", "x", "KNOWS")])),
+def test_manifest_less_graph_snapshot_refused(spark, store):
+    """A graph table whose committed snapshot has no partition manifest (a
+    whole-dir write_snapshot) is refused by every graph-only method, and
+    nothing is committed: a partition commit over it would drop every graph
+    the snapshot holds from later reads."""
+    store.write_snapshot("nodes", _mini_nodes(spark, "g_old", [("x", "X", "Person")]))
+    snap = store.current_snapshot("nodes")
+    n = _mini_nodes(spark, "g_new", [("y", "Y", "Person")])
+    e = _mini_edges(spark, "g_new", [("y", "y", "KNOWS")])
+    for call in (
+        lambda: store.store_graph(n, e),
+        lambda: store.store_graph_merge(n, e, "g_new"),
+        lambda: store.read_partition("nodes", "g_old"),
+        lambda: store.file_rows("nodes", "g_old"),
+        store.list_graphs,
+        lambda: store.delete_graph("g_old"),
+        lambda: store.compact_partition("nodes", "g_old"),
     ):
-        path = os.path.join(store.root, table, "snapshot=0")
-        df.write.mode("overwrite").partitionBy("graph_id").parquet(path)
-        with open(os.path.join(path, "_COMMITTED"), "w") as f:
-            json.dump({"snapshot": 0}, f)
-    assert store._load_partition_manifest("nodes", 0) is None  # truly legacy
-    assert sum(n for _, n in store.file_rows("nodes", "g_old")) == 1
-    assert store.file_rows("nodes", "g_new") == []
-    store.store_graph(
-        _mini_nodes(spark, "g_new", [("y", "Y", "Person")]),
-        _mini_edges(spark, "g_new", [("y", "y", "KNOWS")]),
-    )
-    assert store.list_graphs() == ["g_new", "g_old"]
-    assert store.read("nodes").count() == 2
-    assert store.read("edges").count() == 2
-    # merge path over a second legacy table state also preserves siblings
-    store.store_graph_merge(
-        _mini_nodes(spark, "g_new", [("z", "Z", "Port")]),
-        _mini_edges(spark, "g_new", [("y", "z", "USES_PORT")]),
-        "g_new",
-    )
-    assert store.read("nodes").filter("graph_id = 'g_old'").count() == 1
-    assert store.read("nodes").filter("graph_id = 'g_new'").count() == 2
+        with pytest.raises(ValueError, match="table nodes"):
+            call()
+    assert store.current_snapshot("nodes") == snap
+    assert not store.exists("edges")
+    assert store.read("nodes").count() == 1
 
 
 def test_merge_upsert_keep_existing_label(spark, store):
@@ -260,7 +249,7 @@ def test_compact_partition(spark, store):
     assert after_rows == before_rows
     assert {p for p in _data_files(store, "nodes") if "graph_id=g2" in p} == g2_files
     # current g1 version is a single data file
-    manifest = store._load_partition_manifest("nodes", store.current_snapshot("nodes"))
+    manifest = store._manifest("nodes", store.current_snapshot("nodes"))
     cur = os.path.join(store.root, "nodes", "data", manifest["partitions"]["g1"])
     parqs = [f for f in os.listdir(cur) if f.endswith(".parquet")]
     assert len(parqs) == 1
@@ -365,7 +354,7 @@ def test_pipeline_resume_after_partial_failure(spark, store, tmp_path):
     from knowledge_graph_rag_spark.operators import extract as X
 
     raw = X.extract_raw(X.explode_spans(docs))
-    store.write_snapshot("raw_extract", raw, partition_by=())
+    store.write_snapshot("raw_extract", raw)
     store.mark_done("extract", "kg", run_id="crashed")
 
     res = pipeline.run(spark, docs, store, graph_id="kg", run_id="resumed",
