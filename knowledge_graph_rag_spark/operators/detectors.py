@@ -115,7 +115,7 @@ def detect_fan_out(nodes: DataFrame, edges: DataFrame, limit: int = 20) -> DataF
             .alias("severity"),
         )
         .orderBy(F.desc("unique_ports"), "entity", "destination")
-        .limit(10)
+        .limit(limit)
     )
 
 

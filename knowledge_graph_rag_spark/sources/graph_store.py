@@ -182,9 +182,10 @@ class GraphStore:
         snap = snapshot if snapshot is not None else self.current_snapshot(table)
         if snap is None:
             raise FileNotFoundError(f"table {table} has no committed snapshot")
-        if not os.path.exists(self._manifest_file(table, snap)):
+        try:
+            manifest = self._manifest(table, snap)
+        except ValueError:  # a whole-dir snapshot
             return self.spark.read.parquet(self._snapshot_path(table, snap))
-        manifest = self._manifest(table, snap)
         return self._read_manifest_paths(table, manifest, list(manifest["partitions"]))
 
     def read_partition(self, table: str, graph_id: str,
@@ -225,12 +226,14 @@ class GraphStore:
         snap = self.current_snapshot(table)
         if snap is None:
             return []
-        if graph_id is None and not os.path.exists(self._manifest_file(table, snap)):
-            dirs = [self._snapshot_path(table, snap)]
-        else:
+        try:
             parts = self._manifest(table, snap)["partitions"]
             dirs = [os.path.join(self._data_dir(table), p) for g, p in parts.items()
                     if graph_id in (None, g)]
+        except ValueError:  # a whole-dir snapshot has no graph partitions
+            if graph_id is not None:
+                raise
+            dirs = [self._snapshot_path(table, snap)]
         return [
             (int(f.split("-")[1]), pq.ParquetFile(os.path.join(root, f)).metadata.num_rows)
             for d in dirs for root, _, files in os.walk(d) for f in sorted(files)

@@ -93,6 +93,21 @@ def test_fan_out_detector(graph):
             assert r.severity in ("high", "critical")
 
 
+def test_fan_out_detector_limit(spark):
+    # 12 (src, dst) pairs, each on 6 distinct ports: all 12 are fanned out
+    nodes = spark.createDataFrame(
+        [(f"s{i}", f"10.0.0.{i}", "IP", True) for i in range(12)]
+        + [(f"d{i}", f"d{i}", "Port", False) for i in range(12)],
+        "node_id string, label string, type string, is_internal boolean",
+    )
+    edges = spark.createDataFrame(
+        [(f"s{i}", f"d{i}", p) for i in range(12) for p in range(6)],
+        "src string, dst string, port int",
+    )
+    assert D.detect_fan_out(nodes, edges).count() == 12
+    assert D.detect_fan_out(nodes, edges, limit=3).count() == 3
+
+
 def test_protocol_rarity(graph):
     _, _, edges = graph
     rows = D.detect_protocol_rarity(edges).collect()
