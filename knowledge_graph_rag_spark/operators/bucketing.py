@@ -15,10 +15,13 @@ catalog (Hive/Iceberg) and survive restarts.
 
 from __future__ import annotations
 
+import json
 import os
 from urllib.parse import unquote, urlparse
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def write_bucketed(
@@ -49,18 +52,24 @@ def register_bucketed(
     n_buckets: int = 16,
 ) -> None:
     """(Re-)declare the bucket spec of an existing bucketed parquet directory
-    in the session catalog, writing no data (pinned by the kg_submit resume
-    test). The spec must match how the files were written (write_bucketed),
-    or joins would be silently wrong. A no-op when ``table_name`` already
-    points at ``path`` (catalog metadata, no Spark job); a table of that name
-    elsewhere is dropped first, and being external its files stay."""
+    in the session catalog, writing no data and running no Spark job (pinned
+    by the kg_submit and new-session resume tests). The spec must match how
+    the files were written (write_bucketed), or joins would be silently
+    wrong. A no-op when ``table_name`` already points at ``path``; a table of
+    that name elsewhere is dropped first, and being external its files
+    stay."""
     if spark.catalog.tableExists(table_name):
         rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table_name}").collect()
         location = next(r.data_type for r in rows if r.col_name == "Location")
         if unquote(urlparse(location).path) == os.path.abspath(path):
             return
         spark.sql(f"DROP TABLE {table_name}")
-    schema = spark.read.parquet(path).schema
+    # Spark's own schema JSON from one bucket file's footer: no listing or
+    # inference job (a new session re-declares the table on every resume)
+    part = next(f for f in sorted(os.listdir(path)) if f.endswith(".parquet"))
+    meta = pq.read_schema(os.path.join(path, part)).metadata
+    schema = T.StructType.fromJson(
+        json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"]))
     fields = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
     )

@@ -7,9 +7,10 @@ layout and commit protocol mirror it):
 - nodes/edges partitioned by ``graph_id`` → every query's `MATCH (g {id})`
   prefix becomes partition pruning (S12/S13, SURVEY.md §4)
 - S10 CREATE = commit the incoming graph_id partitions; S11 MERGE =
-  read-current-partition ∪ incoming → per-key precedence merge → commit that
-  one partition (idempotent; COLUMN-wise merge on props — incoming non-null
-  wins per column, mirroring Neo4j ``SET n += props`` which only overwrites
+  current partition ∪ incoming → one keyed aggregate (per node_id, resp.
+  (src, dst, rel_type)) → committed through the same CREATE path
+  (idempotent; COLUMN-wise merge — incoming non-null wins per column, props
+  included, mirroring Neo4j ``SET n += props`` which only overwrites
   provided keys; keep-existing-non-empty label/type on identity —
   neo4j_service.py:132-141)
 - a ``_manifest`` table mirrors the reference's ``.processed_files`` ledger
@@ -50,7 +51,7 @@ import time
 from urllib.parse import unquote
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -265,7 +266,9 @@ class GraphStore:
     def store_graph_merge(self, nodes: DataFrame, edges: DataFrame,
                           graph_id: str) -> None:
         """S11 MERGE upsert into one graph_id partition
-        (neo4j_service.py:76-188) — reads and rewrites ONLY that partition:
+        (neo4j_service.py:76-188): reads ONLY that partition and commits the
+        result through ``store_graph``. Nodes and edges the frames do not
+        name are kept unchanged.
 
         nodes — `MERGE (n:Node {id})`: on-create take incoming row; on-match
         keep existing non-empty label/type/entity_class, and merge value
@@ -273,57 +276,38 @@ class GraphStore:
         where the incoming column is null (Neo4j ``SET n += props`` only
         overwrites provided keys).
         edges — `MERGE (s)-[r]->(t)` keyed (src, dst, rel_type): incoming
-        row wins.
+        row wins, then the smallest edge_id.
         """
-        inc_nodes = nodes.withColumn("graph_id", F.lit(graph_id))
-        inc_edges = edges.withColumn("graph_id", F.lit(graph_id))
+        flag = F.col("_flag")  # 0 = existing row, 1 = incoming row
 
-        old_nodes = self.read_partition("nodes", graph_id)
-        if old_nodes is not None:
-            inc_nodes = self._merge_node_partition(old_nodes, inc_nodes)
-        self.upsert_graph_partitions("nodes", inc_nodes, sort_within=("node_id",))
+        def with_existing(table: str, inc: DataFrame) -> DataFrame:
+            inc = inc.withColumn("graph_id", F.lit(graph_id)).withColumn("_flag", F.lit(1))
+            old = self.read_partition(table, graph_id)
+            return inc if old is None else old.withColumn("_flag", F.lit(0)).unionByName(
+                inc, allowMissingColumns=True)
 
-        old_edges = self.read_partition("edges", graph_id)
-        if old_edges is not None:
-            both_e = old_edges.withColumn("_prio", F.lit(1)).unionByName(
-                inc_edges.withColumn("_prio", F.lit(2)), allowMissingColumns=True
-            )
-            w = Window.partitionBy("src", "dst", "rel_type").orderBy(
-                F.desc("_prio"), "edge_id"
-            )
-            inc_edges = (
-                both_e.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn", "_prio")
-            )
-        self.upsert_graph_partitions("edges", inc_edges, sort_within=("src", "dst"))
+        # one keyed aggregate per table: each column picks its row by an
+        # integer order, so no row is ordered and map columns (props) merge
+        def pick(c: str):
+            if c in ("label", "type", "entity_class"):
+                # existing non-empty, then incoming, then existing empty
+                order = F.when((flag == 0) & (F.trim(c) != ""), 2).otherwise(flag)
+            else:  # incoming non-null, then existing non-null
+                order = F.when(F.col(c).isNotNull(), flag)
+            return F.max_by(c, order).alias(c)
 
-    @staticmethod
-    def _merge_node_partition(old_part: DataFrame, inc: DataFrame) -> DataFrame:
-        """Column-wise node upsert: old/new rows pivot into one row per
-        node_id, then identity columns keep the existing non-empty value and
-        every other column coalesces incoming-first."""
-        both = old_part.withColumn("_prio", F.lit(1)).unionByName(
-            inc.withColumn("_prio", F.lit(2)), allowMissingColumns=True
-        )
-        cols = [c for c in both.columns if c not in ("node_id", "_prio")]
-        ident_cols = [c for c in ("label", "type", "entity_class") if c in cols]
-        row = F.struct(*cols)
-        pivoted = both.groupBy("node_id").agg(
-            F.max(F.when(F.col("_prio") == 1, row)).alias("o"),
-            F.max(F.when(F.col("_prio") == 2, row)).alias("n"),
-        )
+        both = with_existing("nodes", nodes)
+        cols = [c for c in both.columns if c != "_flag"]
+        merged_nodes = both.groupBy("node_id").agg(
+            *[pick(c) for c in cols if c != "node_id"]).select(*cols)
 
-        def merged_col(c):
-            o, n = F.col(f"o.{c}"), F.col(f"n.{c}")
-            if c in ident_cols:
-                # keep existing label/type when present and non-empty
-                return F.when(
-                    o.isNotNull() & (F.trim(o) != ""), o
-                ).otherwise(n).alias(c)
-            return F.coalesce(n, o).alias(c)
+        both, key = with_existing("edges", edges), ["src", "dst", "rel_type"]
+        cols = [c for c in both.columns if c != "_flag"]
+        merged_edges = both.groupBy(*key).agg(F.min_by(
+            F.struct(*[c for c in cols if c not in key]), F.struct(-flag, "edge_id"),
+        ).alias("e")).select(*key, "e.*").select(*cols)
 
-        return pivoted.select("node_id", *[merged_col(c) for c in cols])
+        self.store_graph(merged_nodes, merged_edges)
 
     def get_graph(self, graph_id: str, node_limit: int = 1000,
                   edge_limit: int = 2000) -> tuple[DataFrame, DataFrame]:
@@ -360,26 +344,30 @@ class GraphStore:
 
     def compact_partition(self, table: str, graph_id: str,
                           target_files: int = 1,
-                          sort_within: tuple[str, ...] = (),
-                          sub_partition: tuple[str, ...] = ()) -> None:
+                          sort_within: tuple[str, ...] = ()) -> None:
         """Iceberg ``rewrite_data_files`` analogue: rewrite one partition's
         accumulated small files (every incremental commit adds up to
         shuffle-partition-count files) into ``target_files``, committed as a
         normal snapshot. Content is unchanged; pair with vacuum() to reclaim
-        the superseded version dirs. For sub-partitioned tables (the entity
-        index) pass the same ``sub_partition`` the table was written with, or
-        the rewrite would flatten the sub-partition dirs and lose those
-        columns (they live in the directory names, not the files)."""
+        the superseded version dirs. A sub-partitioned table (the entity
+        index) keeps its layout: the sub-partition columns are read off the
+        current version dir's ``<col>=`` dirs and written back the same way."""
         part = self.read_partition(table, graph_id)
         if part is None:
             raise FileNotFoundError(f"no partition {graph_id} in {table}")
+        sub_partition, d = [], os.path.join(
+            self._data_dir(table),
+            self._manifest(table, self.current_snapshot(table))["partitions"][graph_id])
+        while subs := sorted(n for n in os.listdir(d) if "=" in n):
+            sub_partition.append(subs[0].split("=", 1)[0])
+            d = os.path.join(d, subs[0])
         if sub_partition:
             # coalesce per sub-partition value, not across them
             part = part.repartition(target_files, *sub_partition)
         else:
             part = part.coalesce(target_files)
         self.upsert_graph_partitions(
-            table, part, sort_within=sort_within, sub_partition=sub_partition,
+            table, part, sort_within=sort_within, sub_partition=tuple(sub_partition),
         )
 
     def vacuum(self, table: str, keep_last: int = 2) -> list[str]:

@@ -11,7 +11,9 @@ checkpointing handled by Spark instead of a hand-rolled ``.processed_files``:
   parse/score plan as batch (plans are shared: parse_logs/score_connections
   are pure DataFrame transforms, batch/stream agnostic).
 - :func:`stream_to_graph_sink` — foreachBatch writer that upserts each
-  micro-batch through GraphStore.store_graph_merge, i.e. the S11 MERGE.
+  micro-batch through GraphStore.store_graph_merge, i.e. the S11 MERGE: the
+  first batch creates the graph partition, every later one merges into it
+  (telemetry nodes carry ``props``, which the merge takes column-wise).
 
 ``trigger(availableNow=True)`` turns it back into the reference's startup
 scan: process everything pending, then stop.

@@ -231,10 +231,7 @@ def test_entity_index_incremental_update(kg, spark, tmp_path):
 
     # compaction keeps the sub-partition layout (tok_prefix lives in dir
     # names) — search is unchanged after rewrite
-    store.compact_partition(
-        "entity_index", "g2", sort_within=("token",),
-        sub_partition=("tok_prefix",),
-    )
+    store.compact_partition("entity_index", "g2", sort_within=("token",))
     index2 = store.read(R.ENTITY_INDEX_TABLE)
     assert "tok_prefix" in index2.columns
     zeta2 = R.entity_search_indexed(index2, other, "zeta", 10, graph_id="g2")
@@ -249,6 +246,40 @@ def test_entity_index_incremental_update(kg, spark, tmp_path):
     store.delete_graph("g2")
     assert store.read(R.ENTITY_INDEX_TABLE).filter(
         F.col("graph_id") == "g2").count() == 0
+
+
+def test_compact_partition_keeps_sub_partitions(kg, spark, tmp_path):
+    """compact_partition reads a table's sub-partition columns off its
+    version dir, so compacting the entity index with no arguments keeps
+    ``tok_prefix`` in the dir names: the whole table still reads, and
+    indexed search returns what it did before."""
+    import os
+
+    from knowledge_graph_rag_spark.sources.graph_store import GraphStore
+
+    nodes, _ = kg
+    store = GraphStore(spark, str(tmp_path / "wh"))
+    R.update_entity_index(store, nodes, "kg")
+    R.update_entity_index(store, nodes.withColumn("graph_id", F.lit("g2")), "g2")
+
+    def search(probe):
+        index = store.read(R.ENTITY_INDEX_TABLE)
+        return sorted(tuple(r) for r in R.entity_search_indexed(
+            index, nodes, probe, 100, graph_id="kg").collect())
+
+    before_rows = sorted(tuple(r) for r in store.read(R.ENTITY_INDEX_TABLE).collect())
+    before = {p: search(p) for p in ("acme", "springfield", "acme corp")}
+    assert all(before.values())
+    store.compact_partition(R.ENTITY_INDEX_TABLE, "kg")
+    manifest = store._manifest(R.ENTITY_INDEX_TABLE,
+                               store.current_snapshot(R.ENTITY_INDEX_TABLE))
+    vdir = os.path.join(store.root, R.ENTITY_INDEX_TABLE, "data",
+                        manifest["partitions"]["kg"])
+    subdirs = os.listdir(vdir)
+    assert subdirs and all(d.startswith("tok_prefix=") for d in subdirs)
+    after_rows = sorted(tuple(r) for r in store.read(R.ENTITY_INDEX_TABLE).collect())
+    assert after_rows == before_rows
+    assert {p: search(p) for p in before} == before
 
 
 def test_entity_search_indexed_scopes_nodes_side(spark, tmp_path):

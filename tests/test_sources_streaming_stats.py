@@ -238,25 +238,41 @@ def test_streaming_ingest(spark, tmp_path):
     q = stream_to_graph_sink(scored, store, "g_stream", str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
-    nodes, edges = store.get_graph("g_stream")
-    ids = {r.node_id for r in nodes.collect()}
-    assert {"ip_10_0_0_1", "ip_8_8_8_8", "port_4444", "attack_dos"} <= ids
-    assert edges.filter(F.col("rel_type") == "CONNECTED_TO").count() == 2
-    assert any(k.startswith("stream_batch::g_stream") for k in store.completed_stages())
-
-    # the sink maintains the entity-index invariant like every other
-    # node-commit path: index partition == entity_token_index(current nodes)
     from knowledge_graph_rag_spark.operators import retrieval as R
 
-    expected = {tuple(r) for r in R.entity_token_index(nodes).collect()}
-    actual = {
-        tuple(r)
-        for r in store.read(R.ENTITY_INDEX_TABLE)
-        .filter(F.col("graph_id") == "g_stream")
-        .select("graph_id", "node_id", "token", "tok_prefix")
-        .collect()
-    }
-    assert actual == expected and actual
+    def check_index(nodes):
+        # the sink maintains the entity-index invariant like every other
+        # node-commit path: index partition == entity_token_index(current nodes)
+        expected = {tuple(r) for r in R.entity_token_index(nodes).collect()}
+        actual = {
+            tuple(r)
+            for r in store.read(R.ENTITY_INDEX_TABLE)
+            .filter(F.col("graph_id") == "g_stream")
+            .select("graph_id", "node_id", "token", "tok_prefix")
+            .collect()
+        }
+        assert actual == expected and actual
+
+    nodes, edges = store.get_graph("g_stream")
+    first_ids = {r.node_id for r in nodes.collect()}
+    assert {"ip_10_0_0_1", "ip_8_8_8_8", "port_4444", "attack_dos"} <= first_ids
+    assert edges.filter(F.col("rel_type") == "CONNECTED_TO").count() == 2
+    assert any(k.startswith("stream_batch::g_stream") for k in store.completed_stages())
+    check_index(nodes)
+
+    # a second micro-batch, on restart from the same checkpoint, MERGEs into
+    # the partition the first one wrote (whose port nodes carry props)
+    second = dict(logs[0], timestamp="2026-01-01T00:00:02", source_ip="10.0.0.9",
+                  dest_ip="10.0.0.3", source_port=1026, dest_port=22)
+    (in_dir / "batch2.json").write_text(json.dumps(second))
+    q = stream_to_graph_sink(scored, store, "g_stream", str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+
+    nodes, edges = store.get_graph("g_stream")
+    ids = {r.node_id for r in nodes.collect()}
+    assert ids == first_ids | {"ip_10_0_0_9", "port_22"}
+    assert edges.filter(F.col("rel_type") == "CONNECTED_TO").count() == 3
+    check_index(nodes)
 
 
 def test_stream_documents_to_kg_matches_batch(spark, tmp_path):

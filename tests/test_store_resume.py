@@ -271,6 +271,75 @@ def test_merge_column_wise_coalesce(spark, store):
     assert row.label == "Label A"  # null incoming label → keep existing
 
 
+def _rows_by_id(df):
+    """node_id → row as a dict, with map columns as sorted item tuples so
+    rows compare and hash."""
+    return {
+        r.node_id: {k: tuple(sorted(v.items())) if isinstance(v, dict) else v
+                    for k, v in r.asDict().items()}
+        for r in df.collect()
+    }
+
+
+def test_merge_into_pipeline_graph(spark, store):
+    """MERGE into a graph that pipeline.run built (nodes carry
+    ``props: map<string,string>``): the docstring's rules hold for every
+    column, props included, every node the frame does not name comes out
+    unchanged, and the result does not depend on the shuffle partition
+    count."""
+    docs = synth.documents_df(spark, 40)
+    prev, results = spark.conf.get("spark.sql.shuffle.partitions"), []
+    for parts in ("1", "8"):
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
+        try:
+            st = GraphStore(spark, f"{store.root}_{parts}")
+            pipeline.run(spark, docs, st, graph_id="kg", run_id="r1",
+                         enable_lsh_canonicalization=False,
+                         bucketed_query_tables=False)
+            before = _rows_by_id(st.read_partition("nodes", "kg"))
+            sec = sorted(n for n, r in before.items() if r["severity"] is not None)
+            a, b = sec[0], sec[1]
+            assert before[a]["props"] is None and before[a]["confidence"] is not None
+            inc = spark.createDataFrame(
+                [("kg", "zz_new", "New Node", "Person", 0.5, None, {"k": "n"}),
+                 ("kg", a, "Renamed", "Device", 0.95, None, {"k": "a"}),
+                 ("kg", b, None, None, 0.25, "low", None)],
+                "graph_id string, node_id string, label string, type string, "
+                "confidence double, severity string, props map<string,string>",
+            )
+            no_edges = spark.createDataFrame(
+                [], "graph_id string, edge_id string, src string, dst string, "
+                    "rel_type string")
+            st.store_graph_merge(inc, no_edges, "kg")
+            # a second MERGE with a null props keeps the first one's value
+            st.store_graph_merge(
+                inc.filter(F.col("node_id") == a).withColumn(
+                    "props", F.lit(None).cast("map<string,string>")),
+                no_edges, "kg",
+            )
+            after = _rows_by_id(st.read_partition("nodes", "kg"))
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        assert set(after) == set(before) | {"zz_new"}
+        # on-create: the incoming row
+        assert (after["zz_new"]["label"], after["zz_new"]["type"],
+                after["zz_new"]["props"]) == ("New Node", "Person", (("k", "n"),))
+        # on-match: existing label/type kept; non-null incoming value wins,
+        # existing value kept where the incoming one is null
+        assert (after[a]["label"], after[a]["type"]) == (
+            before[a]["label"], before[a]["type"])
+        assert after[a]["confidence"] == 0.95 and after[a]["props"] == (("k", "a"),)
+        assert after[a]["severity"] == before[a]["severity"]
+        assert (after[b]["label"], after[b]["type"]) == (
+            before[b]["label"], before[b]["type"])
+        assert (after[b]["confidence"], after[b]["severity"]) == (0.25, "low")
+        assert after[b]["props"] is None
+        for nid in set(before) - {a, b}:
+            assert after[nid] == before[nid], nid
+        results.append(after)
+    assert results[0] == results[1]
+
+
 def test_delete_graph(spark, store):
     store.store_graph(
         _mini_nodes(spark, "g1", [("a", "A", "Person")]),
@@ -322,9 +391,12 @@ def test_bucketed_tables_follow_the_resumed_warehouse(spark, tmp_path, count_job
                      enable_lsh_canonicalization=False)
         pipeline.run(spark, docs_a, wh_a, graph_id="g", run_id="a1",
                      enable_lsh_canonicalization=False)
-        res = pipeline.run(spark, docs_b, wh_b, graph_id="g", run_id="b2",
-                           enable_lsh_canonicalization=False)
-        assert not res.stages_run
+        # re-declaring the tables at B's files reads their schema from a
+        # footer (what a new session does on resume): no job
+        with count_jobs() as jobs:
+            res = pipeline.run(spark, docs_b, wh_b, graph_id="g", run_id="b2",
+                               enable_lsh_canonicalization=False)
+        assert not res.stages_run and jobs == []
         # A's graph differs from B's, so a table left at A's files shows
         assert wh_a.read("nodes").count() != wh_b.read("nodes").count()
         for table in ("nodes", "edges"):
